@@ -630,12 +630,17 @@ object Bench {
       } catch { case _: Throwable => "" }
       // Sidecars run ~4–5 min of wall outside the judged per-query total;
       // SPARK_GRAFT_SIDECARS=0 skips them for local verify cycles (every
-      // key stays present and parse-valid, marked skipped). The driver
-      // never sets the env, so its bench_detail.json is unchanged.
+      // key stays present and parse-valid, marked skipped). A skipped run
+      // says so on stderr and in a top-level "sidecars_skipped" flag, so
+      // a detail file written with the env set is never mistaken for a
+      // full one; without the env the file is unchanged.
       val sidecarsOn = sys.env.getOrElse("SPARK_GRAFT_SIDECARS", "1") != "0"
+      if (!sidecarsOn)
+        System.err.println("[bench] SPARK_GRAFT_SIDECARS=0: sidecar metrics skipped")
       def sidecar(f: => String): String =
         if (sidecarsOn) f else """{"skipped":true}"""
       val detail = line(6).dropRight(1) +
+        (if (sidecarsOn) "" else ""","sidecars_skipped":true""") +
         s""","bands_n":${bands.size},"band_outliers":${bandOutliers.mkString("{", ",", "}")}""" +
         s""","gc_ms":$gcJson""" +
         s""","serving_ms":${sidecar(servingLatency(spark, sfDir))}""" +

@@ -21,11 +21,13 @@ import org.apache.spark.sql.functions._
   * stages through this API, so the DuckDB oracle checks the builder
   * end-to-end every round.
   *
-  * Laziness contract: every step except [[tokenBudget]] only composes the
-  * plan. `tokenBudget` delegates to [[Sampling.tokenBudget]], which runs
-  * its pass-1 job eagerly and rebuilds the frame behind an analysis
-  * barrier — gate and project BEFORE budgeting (the step order the
-  * builder's API makes natural).
+  * Laziness contract: every step except [[tokenBudget]] and
+  * [[scrubSharedPassages]] only composes the plan. `tokenBudget`
+  * delegates to [[Sampling.tokenBudget]], which runs its pass-1 job
+  * eagerly and rebuilds the frame behind an analysis barrier — gate and
+  * project BEFORE budgeting (the step order the builder's API makes
+  * natural). `scrubSharedPassages` checkpoints its shared subtrees, which
+  * runs jobs at composition (see the step's note).
   */
 final class CorpusRecipe private (
     val frame: DataFrame, idCol: String, textCol: String) {
@@ -229,11 +231,13 @@ final class CorpusRecipe private (
     // (p5: boilerplate-drop → normalize → scrub) each reference re-ran
     // the whole upstream chain (r19; the pinned set is corpus-sized, the
     // same posture as passageScrub's own internal checkpoints).
-    // LAZY (ADVICE r19): an eager checkpoint here would execute the whole
-    // upstream pipeline at recipe-COMPOSITION time, breaking the class
-    // doc's laziness contract — eager=false still truncates lineage and
-    // dedupes the three references at first action (the Spread.barrier
-    // precedent)
+    // LAZY (ADVICE r19): eager=false truncates lineage and dedupes the
+    // three references at first action (the Spread.barrier precedent).
+    // Under AQE it defers only the RESULT stage: the checkpoint plans the
+    // upstream through AdaptiveSparkPlanExec, which runs every upstream
+    // shuffle map stage at composition time; and passageScrub's eager sh
+    // checkpoint runs jobs here regardless. CorpusRecipeSpec pins the
+    // composition-time job count (3 over a scan, 4 over one exchange).
     val pinned = frame.localCheckpoint(eager = false)
     val cleaned = TextDedup.passageScrub(pinned, textCol, idCol, k)
       .select(col(idCol), col("clean_text"))

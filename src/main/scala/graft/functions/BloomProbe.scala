@@ -54,10 +54,6 @@ object BloomBroadcasts {
   private val filters =
     new java.util.concurrent.ConcurrentHashMap[Long, BloomFilter]()
 
-  private def md5Hex(b: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5").digest(b)
-      .map("%02x".format(_)).mkString
-
   private def drop(bc: Broadcast[Array[Byte]]): Unit = {
     filters.remove(bc.id)
     bc.destroy()
@@ -68,7 +64,7 @@ object BloomBroadcasts {
     */
   def register(s: SparkSession, bf: Array[Byte]): String = {
     require(bf != null && bf.nonEmpty, "cannot register an empty bloom filter")
-    val key = s"${s.sparkContext.applicationId}/${md5Hex(bf)}"
+    val key = s"${s.sparkContext.applicationId}/${TextFunctions.md5Hex(bf)}"
     synchronized {
       if (byContent.get(key) == null) { // get refreshes recency when present
         byContent.put(key, s.sparkContext.broadcast(bf))

@@ -165,7 +165,10 @@ object SequencePack {
     // it at packManifest's (already eager, see class doc) pass-1 job, so
     // the sep rows and the manifest BOTH read the pinned copy: ids now
     // executes exactly twice (count build + join side), the documented
-    // floor for this contract.
+    // floor for this contract. Under AQE "lazy" defers only the result
+    // stage: every exchange below the count, its own groupBy's included,
+    // runs its map stage as a job right here, when the checkpoint is
+    // planned.
     val cnt = base.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
     val (withSep, counts) = sepId match {
       case Some(sid) =>

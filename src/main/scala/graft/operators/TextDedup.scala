@@ -58,9 +58,10 @@ object TextDedup {
     shingleRowsPos(tokenRows(df, textCol, idCol), idCol, shingleK)
       .select(col(idCol), col("s"))
 
-  /** MinHash signatures: k independent hash families over `shingleK`-word
-    * shingles, one (doc, j, minh) row per family. Single shuffle
-    * (repartition → explode → partition-local groupBy → unpivot).
+  /** MinHash signatures: k Kirsch–Mitzenmacher hash families over
+    * `shingleK`-word shingles, one (doc, j, minh) row per family. Single
+    * shuffle (repartition → row-local sketch → partition-local groupBy →
+    * unpivot).
     */
   def minhashSignatures(
       df: DataFrame, textCol: String, idCol: String,
@@ -71,18 +72,22 @@ object TextDedup {
       .select(col(idCol), col("j").cast("int").as("j"), col("minh"))
   }
 
-  /** Wide (one row per doc) signature matrix m0..m{k-1}. */
+  /** Wide (one row per doc) signature matrix m0..m{k-1}: one row-local
+    * [[minhashSketch]] per document after the spread. The groupBy reuses
+    * the spread's partitioning (no extra exchange) and merges rows that
+    * share an id by element-wise min. Null sketches are dropped after the
+    * aggregate: a filter on the sketch column would be pushed below the
+    * spread and run the kernel twice, once at scan parallelism.
+    */
   def minhashWide(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int): DataFrame = {
-    // One md5 per shingle; the k families derive from (h1, h2) via the
-    // Kirsch–Mitzenmacher construction — 8× less hashing than k seeded
-    // md5s, the dominant cost of the sketch at corpus scale.
-    val sh = shingleRows(df, textCol, idCol, shingleK)
-      .select(col(idCol), hashPair(col("s")).as("hp"))
-      .select(col(idCol), col("hp.h1").as("h1"), col("hp.h2").as("h2"))
-    val aggs = (0 until k).map(j => min(kmHash(col("h1"), col("h2"), j)).as(s"m$j"))
-    sh.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    val sketch = udf((t: String) => minhashSketch(t, k, shingleK))
+    val aggs = (0 until k).map(j => min(col("__sig")(j)).as(s"m$j"))
+    Spread.byCols(df, Seq(col(idCol)))
+      .select(col(idCol), sketch(col(textCol)).as("__sig"))
+      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+      .where(col("m0").isNotNull)
   }
 
   /** LSH banding: docs whose signatures agree on ALL rows of some band are
@@ -443,7 +448,10 @@ object TextDedup {
     // checkpoint job computes through tok and materializes its persist on
     // the way, so ONE pre-job pins both frames instead of two serial
     // checkpoint boundaries; the kept anti-join later reads the pinned
-    // tok. re-spread after the checkpoint: an ExistingRDD scan reports
+    // tok. Under AQE "lazy" defers only tok's result stage: its spread
+    // exchange's map stage still runs as its own job when the checkpoint
+    // is planned (CorpusRecipeSpec pins the count). re-spread after the
+    // checkpoint: an ExistingRDD scan reports
     // UnknownPartitioning, so the shingle window would otherwise insert
     // an ENSURE_REQUIREMENTS exchange that AQE coalesces to one
     // partition, serializing the lead()-window pass (r19)

@@ -7,7 +7,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 /** The wire scaffolding [[SearchService]] and [[HybridSearchService]]
   * share — ONE definition of the protective surface (POST-only → 405,
   * token-bucket admission → 429, declared-or-actual body overflow → 413,
-  * anything thrown → 501) and of the JSON value escaping, so a fix to
+  * anything thrown → 500) and of the JSON value escaping, so a fix to
   * any of them cannot silently miss one service (self-review r16 #4).
   */
 private[serving] object HttpServing {
@@ -64,7 +64,7 @@ private[serving] object HttpServing {
                   bucket: TokenBucket,
                   handle: Array[Byte] => (Int, String)): Unit = {
     // readNBytes takes an Int: a cap at or past Int.MaxValue would
-    // overflow `toInt + 1` and 501 every request — fail at registration,
+    // overflow `toInt + 1` and fail every request — fail at registration,
     // not per request (self-review r16 pass 2 #5)
     require(maxBodyBytes > 0 && maxBodyBytes < Int.MaxValue,
       s"maxBodyBytes $maxBodyBytes must be in (0, Int.MaxValue)")
@@ -91,7 +91,7 @@ private[serving] object HttpServing {
         }
       } catch {
         case e: Exception =>
-          respond(ex, 501, s"""{"error":"${e.getClass.getSimpleName}"}""")
+          respond(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""")
       }
     })
   }

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * The protective surface mirrors [[SearchService]] (and the reference's
   * searcher): request-body cap → 413, token-bucket admission → 429,
-  * anything thrown → 501. Queries whose terms miss the corpus entirely
+  * anything thrown → 500. Queries whose terms miss the corpus entirely
   * still answer from the dense leg; empty/blank bodies answer 400.
   */
 class HybridSearchService(

@@ -111,7 +111,7 @@ class SearchService(
     // Over budget → the distributed plan serves, identical results.
     maxLocalCells: Long = 32L << 20) {
 
-  // fail at construction, not as a 501 on the first request (the same
+  // fail at construction, not as a 500 on the first request (the same
   // loud-edge contract IvfIndex.search/rankCentroids now enforce)
   require(topK >= 1, s"topK $topK must be >= 1")
   require(nlist >= 1 && nprobe >= 1,

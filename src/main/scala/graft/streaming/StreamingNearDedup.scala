@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.functions.TextFunctions.{md5Hex, minhashSketch}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -20,8 +23,8 @@ case class NearDupPair(d1: Long, d2: Long, simEst: Double)
   * history, without re-scanning the corpus.
   *
   * Shape: a stateless flatMap computes each document's k-row MinHash
-  * signature (bit-identical to the batch sketch — same md5→60-bit hashes,
-  * same Kirsch–Mitzenmacher families; spec-verified) and emits one row per
+  * signature (the batch path's own kernel,
+  * [[graft.functions.TextFunctions.minhashSketch]]) and emits one row per
   * LSH band; `flatMapGroupsWithState` keyed by (band, band-signature)
   * bucket then emits each new arrival paired against the bucket's members.
   *
@@ -47,37 +50,6 @@ object StreamingNearDedup {
   case class TimedBucketState(members: List[TimedMember], dropped: Long)
   case class TimedBucketRow(bucket: String, id: Long, sig: Array[Long],
                             ts: java.sql.Timestamp)
-
-  /** Plain-Scala mirror of the batch sketch
-    * ([[graft.operators.TextDedup.minhashWide]]): single-space tokens,
-    * `shingleK`-word shingles, one md5 per shingle split into
-    * (h1 = hex[0,15), h2 = hex[16,30)), m_j = min (h1 + j·h2) mod 2⁶⁰.
-    * Returns null when the document has no full shingle (the batch path
-    * drops those docs). Bit-parity is asserted in StreamingNearDedupSpec.
-    */
-  private[graft] def signature(text: String, k: Int, shingleK: Int): Array[Long] = {
-    val toks = text.split(" ", -1)
-    if (toks.length < shingleK) return null
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val mins = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i + shingleK <= toks.length) {
-      val shingle = toks.slice(i, i + shingleK).mkString(" ")
-      val hex = md.digest(shingle.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      md.reset()
-      val h1 = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-      val h2 = java.lang.Long.parseLong(hex.substring(16, 30), 16)
-      var j = 0
-      while (j < k) {
-        val hj = (h1 + h2 * j) & ((1L << 60) - 1)
-        if (hj < mins(j)) mins(j) = hj
-        j += 1
-      }
-      i += 1
-    }
-    mins
-  }
 
   /** [[candidatePairs]] bounded to an event-time window — the production
     * shape for an infinite stream: a document only pairs against bucket
@@ -109,7 +81,7 @@ object StreamingNearDedup {
     val windowMs = windowSec * 1000L
     docs
       .flatMap { d =>
-        val sig = signature(d.text, k, shingleK)
+        val sig = minhashSketch(d.text, k, shingleK)
         if (sig == null) Iterator.empty
         else (0 until bands).iterator.map { b =>
           val bsig = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")
@@ -174,10 +146,6 @@ object StreamingNearDedup {
     */
   case class SigRow(doc_id: Long, band: Int, bsig: String)
 
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Band-signature rows of a document stream — BIT-IDENTICAL to the batch
     * [[graft.operators.IncrementalDedup.bandSignatures]] (md5 over the
     * band's comma-joined minhash rows; StreamLakeFlushSpec pins row-set
@@ -191,11 +159,11 @@ object StreamingNearDedup {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap { d =>
-      val sig = signature(d.text, k, shingleK)
+      val sig = minhashSketch(d.text, k, shingleK)
       if (sig == null) Iterator.empty
       else (0 until bands).iterator.map { b =>
-        SigRow(d.id, b,
-          md5Hex(sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")))
+        val band = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")
+        SigRow(d.id, b, md5Hex(band.getBytes(UTF_8)))
       }
     }
   }
@@ -237,7 +205,7 @@ object StreamingNearDedup {
     import spark.implicits._
     docs
       .flatMap { d =>
-        val sig = signature(d.text, k, shingleK)
+        val sig = minhashSketch(d.text, k, shingleK)
         if (sig == null) Iterator.empty
         else (0 until bands).iterator.map { b =>
           val bsig = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")

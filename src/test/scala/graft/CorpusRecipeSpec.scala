@@ -117,6 +117,40 @@ class CorpusRecipeSpec extends SparkSpec {
     assert(out(1L) == "tail1 x" && out(3L).startsWith("totally"), out.toString)
   }
 
+  test("scrubSharedPassages composition: jobs run before the first action, pinned") {
+    val eight = Seq(
+      (1L, "one two three four five six seven eight tail1 x"),
+      (2L, "one two three four five six seven eight tail2 y"),
+      (3L, "totally distinct words with no shared passage at all"))
+      .toDF("doc_id", "text")
+    def composeJobs(aqe: Boolean): (Int, Int) = {
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      try {
+        val sc = spark.sparkContext
+        val (_, overScan) = org.apache.spark.JobCounter(sc) {
+          CorpusRecipe(eight).scrubSharedPassages(8)
+        }
+        val upstream = CorpusRecipe(eight).exactDedup()
+        val (scrubbed, overExchange) = org.apache.spark.JobCounter(sc) {
+          upstream.scrubSharedPassages(8)
+        }
+        assert(scrubbed.frame.count() == 3)
+        (overScan, overExchange)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+    // Under AQE a lazy localCheckpoint still materializes every shuffle
+    // stage below it; only its result stage waits for an action. Over a
+    // bare scan: tok's lazy checkpoint runs its spread's map stage (1),
+    // sh's EAGER checkpoint runs its own spread's map stage and its result
+    // job (2). An upstream exchange (exactDedup's groupBy) adds its map
+    // stage (1) to the recipe-level lazy pin.
+    assert(composeJobs(aqe = true) == ((3, 4)))
+    // Without AQE shuffle stages run inside the job that needs them: the
+    // lazy pins run nothing and only sh's eager checkpoint job remains.
+    assert(composeJobs(aqe = false) == ((1, 1)))
+  }
+
   test("dropBoilerplateLines removes corpus-frequent lines in place") {
     val lined = Seq(
       (1L, "unique one\nsubscribe now"),

@@ -193,6 +193,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) == 0, s"probe must be shuffle-free, got ${exchanges(p)}")
   }
 
+  test("e2_minhash_sig: the sketch is row-local — no Window, no Generate over shingle rows") {
+    // one kernel call per document after the spread; the only Generate
+    // left is the k-row unpivot (Stack) of the finished signature
+    import org.apache.spark.sql.catalyst.expressions.Stack
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val planned = SparkEntry.queries("e2_minhash_sig")(spark, Sf0001)
+      .queryExecution.sparkPlan
+    val windows = planned.collect { case w: WindowExec => w }
+    assert(windows.isEmpty, s"sketch must not plan a window:\n$planned")
+    val generators = planned.collect { case g: GenerateExec => g.generator }
+    assert(generators.forall(_.isInstanceOf[Stack]),
+      s"only the signature unpivot may generate rows, got $generators:\n$planned")
+  }
+
   test("e2_minhash_pairs: the audited 5-exchange shape holds") {
     val p = plan("e2_minhash_pairs")
     assert(exchanges(p) <= 5, s"expected <=5 exchanges, got ${exchanges(p)}")

@@ -1,12 +1,17 @@
 package graft
 
+import graft.functions.TextFunctions
+import graft.functions.TextFunctions.kmHash
 import graft.operators.TextDedup
 import graft.streaming.{StreamDoc, StreamingNearDedup, TimedDoc}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
-/** Streaming MinHash-LSH near-dup: signature bit-parity with the batch
-  * sketch, pair parity with the batch band-pairs path across micro-batch
-  * boundaries, and the bounded-bucket drop contract.
+/** Streaming MinHash-LSH near-dup: the one sketch kernel's bit-parity with
+  * the SQL form of the sketch, pair parity with the batch band-pairs path
+  * across micro-batch boundaries, and the bounded-bucket drop contract.
   */
 class StreamingNearDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -15,23 +20,76 @@ class StreamingNearDedupSpec extends SparkSpec {
   private val Shingle = 3
   private val Bands = 4
 
-  test("streaming signature is bit-identical to the batch minhashWide sketch") {
-    val docs = Tables.documents(spark, Sf0001).limit(40)
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val wide = TextDedup.minhashWide(
-        Tables.documents(spark, Sf0001).limit(40), "text", "doc_id", K, Shingle)
-      .collect().map(r => r.getLong(0) -> (1 to K).map(r.getLong(_)).toSeq).toMap
-    assert(wide.nonEmpty)
-    docs.foreach { case (id, text) =>
-      val sig = StreamingNearDedup.signature(text, K, Shingle)
-      wide.get(id) match {
-        case Some(expected) =>
-          assert(sig != null && sig.toSeq == expected, s"doc $id sketch mismatch")
-        case None => assert(sig == null, s"doc $id should have no signature")
-      }
+  /** The pre-kernel SQL form of the sketch, kept in test code as the
+    * reference both paths are checked against: posexplode → lead() window
+    * → md5 → conv → kmHash min. The window is partitioned by a per-row key,
+    * so two rows that share an id each contribute only their own shingles
+    * (the DuckDB oracle's semantics); the result is (id → m0..m{K-1}).
+    */
+  private def sqlSketch(docs: DataFrame): Map[Long, Seq[Long]] = {
+    val w = Window.partitionBy(col("__row")).orderBy(col("pos"))
+    val leads = (0 until Shingle).map {
+      case 0 => col("t")
+      case i => lead(col("t"), i).over(w)
     }
-    // short doc: no full shingle → null, matching the batch drop
-    assert(StreamingNearDedup.signature("one two", K, Shingle) == null)
+    val hashed = docs.withColumn("__row", monotonically_increasing_id())
+      .select(col("doc_id"), col("__row"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "t")))
+      .select(col("doc_id"), concat_ws(" ", leads: _*).as("s"),
+        leads.last.isNotNull.as("full"))
+      .where(col("full"))
+      .select(col("doc_id"), md5(col("s")).as("m"))
+      .select(col("doc_id"),
+        conv(substring(col("m"), 1, 15), 16, 10).cast("long").as("h1"),
+        conv(substring(col("m"), 17, 14), 16, 10).cast("long").as("h2"))
+    val aggs = (0 until K).map(j => min(kmHash(col("h1"), col("h2"), j)).as(s"m$j"))
+    hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getLong(0) -> (1 to K).map(r.getLong)).toMap
+  }
+
+  /** The kernel per input row, rows sharing an id merged by element-wise
+    * min; ids whose every row has a null sketch are absent.
+    */
+  private def kernelSketch(rows: Seq[(Long, String)]): Map[Long, Seq[Long]] =
+    rows.flatMap { case (id, text) =>
+      Option(TextFunctions.minhashSketch(text, K, Shingle)).map(id -> _.toSeq)
+    }.groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map { case (x, y) => x min y })
+
+  private def wideSketch(docs: DataFrame): Map[Long, Seq[Long]] =
+    TextDedup.minhashWide(docs, "text", "doc_id", K, Shingle)
+      .collect().map(r => r.getLong(0) -> (1 to K).map(r.getLong)).toMap
+
+  test("streaming signature is bit-identical to the batch minhashWide sketch") {
+    val df = Tables.documents(spark, Sf0001).limit(40).select("doc_id", "text")
+    val rows = df.as[(Long, String)].collect().toSeq
+    val reference = sqlSketch(df)
+    assert(reference.nonEmpty)
+    assert(kernelSketch(rows) == reference, "kernel vs SQL reference")
+    assert(wideSketch(df) == reference, "minhashWide vs SQL reference")
+  }
+
+  test("minhashSketch equals the SQL reference on edge inputs") {
+    val rows = Seq[(Long, String)](
+      1L -> null,
+      2L -> "",
+      3L -> "one two",                        // shingleK - 1 tokens
+      4L -> "one two three",                  // exactly shingleK tokens
+      5L -> " lead and trail ",               // empty first and last tokens
+      6L -> "doubled  space  inside here",    // empty inner tokens
+      7L -> "  ",                             // three empty tokens: one shingle
+      8L -> "größe straße 東京 タワー 🎉 über",  // multi-byte UTF-8
+      9L -> "shared id first row",
+      9L -> "a second row sharing the id")
+    assert(TextFunctions.minhashSketch(null, K, Shingle) == null)
+    assert(TextFunctions.minhashSketch("", K, Shingle) == null)
+    assert(TextFunctions.minhashSketch("one two", K, Shingle) == null)
+    val reference = sqlSketch(rows.toDF("doc_id", "text"))
+    assert(reference.keySet == Set(4L, 5L, 6L, 7L, 8L, 9L))
+    assert(kernelSketch(rows) == reference, "kernel vs SQL reference")
+    assert(wideSketch(rows.toDF("doc_id", "text")) == reference,
+      "minhashWide vs SQL reference")
+    val first = TextFunctions.minhashSketch("shared id first row", K, Shingle)
+    assert(reference(9L) != first.toSeq, "the shared id must merge both rows")
   }
 
   test("streamed candidate pairs across micro-batches equal the batch band pairs") {
