@@ -24,6 +24,13 @@ object Bench {
       cpu.trim.split("\\s+").drop(1).lift(7).map(_.toLong).getOrElse(0L)
     } catch { case _: Throwable => 0L }
 
+  /** A failed sidecar's `bench_detail.json` value: the failure, named —
+    * never an empty object a reader could take for a measurement.
+    */
+  private def sidecarError(t: Throwable): String =
+    s"""{"error":${graft.serving.HttpServing.jsonValue(
+      s"${t.getClass.getName}: ${t.getMessage}")}}"""
+
   private def percentile(xs: Seq[Double], p: Double): Double = {
     val s = xs.sorted
     s(math.round(p * (s.size - 1)).toInt)
@@ -66,7 +73,7 @@ object Bench {
       val (p50, p95, load) = measure(m)
       s""""$m":{"p50_ms":${f1(p50)},"p95_ms":${f1(p95)},"load_s":${f1(load)},"n":${queries.length}}"""
     }.mkString("{", ",", "}")
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** nprobe recall/latency curve sidecar (VERDICT r11 #3): JSON per codec,
     * points from [[AnnRecall.nprobeCurve]] on the clustered fixture —
@@ -83,7 +90,7 @@ object Bench {
           .mkString("[", ",", "]")
         s""""$codec":$arr"""
       }.mkString("{", ",", "}")
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** Sustained serving THROUGHPUT through the full HTTP e2e path (VERDICT
     * r11 #6): the reference rate-limits at 100 req/s/IP
@@ -177,7 +184,7 @@ object Bench {
       val (rps, p95, errs) = measure(m)
       s""""$m":{"rps":${f1(rps)},"p95_ms":${f1(p95)},"clients":$nThreads,"n":${nThreads * perThread},"errors":$errs}"""
     }.mkString("{", ",", "}")
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** Append-serve sidecar (VERDICT r18 #1 — the reference's loader
     * inserts while the searcher serves): sustained vector-endpoint
@@ -244,7 +251,7 @@ object Bench {
       def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
       s"""{"rps":${f1(times.size / wall)},"p95_ms":${f1(percentile(times, 0.95))},"clients":$nThreads,"n":${times.size},"refreshes":$refreshes,"appended_rows":${refreshes * payload.length},"errors":${errs.get()}}"""
     } finally svc.stop()
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** Hybrid TEXT retrieval throughput ([[graft.serving
     * .HybridSearchService]]): concurrent clients POSTing query strings to
@@ -305,7 +312,7 @@ object Bench {
       def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
       s"""{"rps":${f1(nThreads * perThread / wall)},"p95_ms":${f1(percentile(times, 0.95))},"clients":$nThreads,"n":${nThreads * perThread},"errors":${errs.get()}}"""
     } finally svc.stop()
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** Ingest throughput against BASELINE.md's derived target ("≥ 12
     * fps-equivalent per core", the hasher.js:129-130 analog) — the one
@@ -402,7 +409,7 @@ object Bench {
       run(); val w = (0 until 2).map(_ => run()).min
       s"""{"merges":10000,"vocab_rows":$n,"wall_s":${"%.3f".formatLocal(java.util.Locale.ROOT, w)}}"""
     } finally vocab.unpersist()
-  } catch { case _: Throwable => "{}" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   private def ingestThroughput(
       spark: org.apache.spark.sql.SparkSession): String = try {
@@ -413,7 +420,7 @@ object Bench {
     // the NAMED key holds the scalar a target-comparison script reads;
     // the supporting measurements ride in a sibling object
     s"""${f1(fpc)},"ingest_detail":{"frames":$frames,"wall_s":${f1(wall)},"cores":$cores}"""
-  } catch { case _: Throwable => "null" }
+  } catch { case t: Throwable => sidecarError(t) }
 
   /** Per-query GC attribution + inter-row reclaim (VERDICT r11 "What's
     * wrong" #1): BENCH_r11's e10 ran 3.6× its isolated wall INSIDE the
@@ -653,7 +660,11 @@ object Bench {
         s""","ingest_fps_per_core":${sidecar(ingestThroughput(spark))}}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"), detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch {
+      case t: Throwable =>
+        System.err.println("[bench] bench_detail.json not written:")
+        t.printStackTrace()
+    }
     // The LAST printed line is the one the driver parses from its tail
     // buffer — emit it at the highest precision that fits, then fall back
     // to keeping only the SLOWEST queries, adding entries by descending

@@ -134,6 +134,12 @@ object Queries {
       .orderBy($"doc_id")
   }
 
+  /** First 8 md5 hex digits of a testdata path — the tag that keeps two
+    * paths' staged copies apart (a sanitized path alone is lossy).
+    */
+  private def pathTagOf(d: String): String =
+    graft.functions.TextFunctions.md5Hex(d.getBytes("UTF-8")).take(8)
+
   // JSONL/CSV mirrors of the documents table, written once per
   // (session, sf, source version) — like the bucketed tables, a layout
   // job outside the timed read path.
@@ -141,8 +147,7 @@ object Queries {
   private def ensureTextFormat(s: SparkSession, d: String, fmt: String): String =
     textFormatStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#$fmt#${sourceTag(d, "documents.parquet")}") {
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       // PID-keyed: Spark's overwrite deletes the dir before rewriting, so
       // a concurrent bench/verify JVM sharing the path could read a
       // half-written mirror (ADVICE r9 #2)
@@ -416,8 +421,7 @@ object Queries {
     ivfAppendStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "embeddings.parquet")}") {
       import s.implicits._
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       val dir = graft.sources.TempDirs.register(
         s"/tmp/graft_ivf_append_${ProcessHandle.current().pid()}_" +
           s"${operators.SessionCache.token(s).take(8)}_$pathTag")
@@ -1172,8 +1176,7 @@ object Queries {
     * re-stages. Returns the stage directory path.
     */
   private def stageForStream(d: String, tableFile: String): String = {
-    val pathTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val pathTag = pathTagOf(d)
     // PID-keyed like the format mirrors: the staged copy is not atomic, so
     // a concurrent JVM re-staging the same path could expose a truncated
     // file to this one's running stream (ADVICE r9 #2)
@@ -1209,8 +1212,7 @@ object Queries {
     */
   private def stageForStreamSplit(
       s: SparkSession, d: String, tableFile: String, n: Int): String = {
-    val pathTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val pathTag = pathTagOf(d)
     val stage = java.nio.file.Paths.get(graft.sources.TempDirs.register(
       s"/tmp/graft_streamsplit_${tableFile.stripSuffix(".parquet")}_" +
         s"${ProcessHandle.current().pid()}_${n}_" +
@@ -1309,8 +1311,7 @@ object Queries {
     * built once per process, deterministic bytes either way.
     */
   private def stageI1Media(s: SparkSession, d: String): String = {
-    val pathTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val pathTag = pathTagOf(d)
     val root = java.nio.file.Paths.get(graft.sources.TempDirs.register(
       s"/tmp/graft_i1_media_${ProcessHandle.current().pid()}_$pathTag"))
     if (!java.nio.file.Files.exists(root.resolve("_done"))) {
@@ -1488,8 +1489,7 @@ object Queries {
     bm25StoreStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "documents.parquet")}") {
       import s.implicits._
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       // the directory carries the SESSION token, not just (pid, path):
       // the cache key is per-session, so two sessions in one JVM (or a
       // re-keyed rebuild after fixture regeneration) must not write/read
@@ -1541,8 +1541,7 @@ object Queries {
     bm25DeleteStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "documents.parquet")}") {
       import s.implicits._
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       val dir = graft.sources.TempDirs.register(
         s"/tmp/graft_bm25_del_${ProcessHandle.current().pid()}_" +
           s"${operators.SessionCache.token(s).take(8)}_$pathTag")
@@ -1624,8 +1623,7 @@ object Queries {
     rangedDocsStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "documents.parquet")}") {
       import s.implicits._
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       val out = graft.sources.TempDirs.register(
         s"/tmp/graft_ranged_docs_${ProcessHandle.current().pid()}_$pathTag")
       Tables.documents(s, d)
@@ -1639,8 +1637,7 @@ object Queries {
   private def ensureZOrderedDocs(s: SparkSession, d: String): (String, DataFrame) =
     zorderDocsStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "documents.parquet")}") {
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       val out = graft.sources.TempDirs.register(
         s"/tmp/graft_zorder_docs_${ProcessHandle.current().pid()}_$pathTag")
       graft.sources.ZOrder.layout(
@@ -3102,8 +3099,7 @@ object Queries {
     ngramStoreStage.getOrBuild(
       s"${operators.SessionCache.token(s)}#$d#${sourceTag(d, "documents.parquet")}") {
       import s.implicits._
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val pathTag = pathTagOf(d)
       val dir = graft.sources.TempDirs.register(
         s"/tmp/graft_ngram_store_${ProcessHandle.current().pid()}_" +
           s"${operators.SessionCache.token(s).take(8)}_$pathTag")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Codegen'd weighted sum over an SQ8-encoded vector: given `codes` (one
   * unsigned byte per dimension, BinaryType) and a DOUBLE weight array,
-  * returns Σ (codes[i] & 0xFF) · w[i].
+  * returns Σ (codes[i] & 0xFF) · w[i] ([[Kernels.byteDot]]).
   *
   * This is the hot kernel of the quantized search path (SURVEY §4, Milvus
   * IVF_SQ8 at loader.js:332-334): with weights = scale·q the approximate
@@ -33,34 +33,18 @@ case class ByteDot(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val codes = l.asInstanceOf[Array[Byte]]
     val w = r.asInstanceOf[ArrayData]
-    if (codes.length != w.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < codes.length) {
-      acc += (codes(i) & 0xff) * w.getDouble(i)
-      i += 1
-    }
-    acc
+    if (codes.length != w.numElements()) null
+    else Kernels.byteDot(codes, w)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, w) => {
-      // fresh names — see DotProduct.doGenCode: hardcoded locals collide
-      // when two instances share a codegen function scope
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($c.length != $w.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $c.length; $i++) {
-         |    $acc += ($c[$i] & 0xff) * $w.getDouble($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (c, w) => s"""
+       |if ($c.length != $w.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.functions.Kernels.byteDot($c, $w);
+       |}
+     """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ByteDot =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * quantization: given `codes` (one unsigned byte code per subspace,
   * BinaryType) and a flattened per-subspace lookup table of 256 DOUBLE
   * entries each (`lut.length == codes.length * 256`), returns
-  * Σ_j lut[j·256 + (codes[j] & 0xFF)].
+  * Σ_j lut[j·256 + (codes[j] & 0xFF)] ([[Kernels.byteLutSum]]).
   *
   * The LUT is query-scoped (built once on the driver from the query's
   * subvector·centroid inner products) so the scan scores each row with m
@@ -35,34 +35,18 @@ case class ByteLutSum(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val codes = l.asInstanceOf[Array[Byte]]
     val lut = r.asInstanceOf[ArrayData]
-    if (codes.length * 256 != lut.numElements()) return null
-    var acc = 0.0
-    var j = 0
-    while (j < codes.length) {
-      acc += lut.getDouble(j * 256 + (codes(j) & 0xff))
-      j += 1
-    }
-    acc
+    if (codes.length * 256 != lut.numElements()) null
+    else Kernels.byteLutSum(codes, lut)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, lut) => {
-      // fresh names — see DotProduct.doGenCode: hardcoded locals collide
-      // when two instances share a codegen function scope
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($c.length * 256 != $lut.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $c.length; $j++) {
-         |    $acc += $lut.getDouble($j * 256 + ($c[$j] & 0xff));
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (c, lut) => s"""
+       |if ($c.length * 256 != $lut.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.functions.Kernels.byteLutSum($c, $lut);
+       |}
+     """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ByteLutSum =

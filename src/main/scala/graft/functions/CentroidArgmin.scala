@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -46,7 +46,7 @@ object CentroidBroadcasts {
         md.update(buf.array())
       }
     }
-    md.digest().map("%02x".format(_)).mkString
+    java.util.HexFormat.of().formatHex(md.digest())
   }
 
   /** Broadcast `cents` (idempotent per content) and return the registry
@@ -122,11 +122,13 @@ case class CentroidArgminBc(bcast: Broadcast[Array[Array[Double]]],
       s"centroid_argmin requires an array<float|double> vector, got ${t.simpleString}")
   }
 
-  @transient private lazy val cents: Array[Array[Double]] = bcast.value
-  // ‖c_i‖² exactly as the literal form computed it: Array.sum, a
-  // sequential left-to-right fold
+  // the table wrapped once in the form the kernels read
+  @transient private lazy val cents: Array[ArrayData] =
+    bcast.value.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
+  // ‖c_i‖², the same sequential left-to-right fold the literal form's
+  // Array.sum computed (its terms are squares, so 0.0 + x₀ = x₀ exactly)
   @transient private lazy val sumsq: Array[Double] =
-    cents.map(c => c.map(x => x * x).sum)
+    cents.map(Kernels.sumSq(_, false))
   @transient private lazy val childIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
@@ -137,16 +139,8 @@ case class CentroidArgminBc(bcast: Broadcast[Array[Array[Double]]],
     var bestD = 0.0
     var i = 0
     while (i < cents.length) {
-      val c = cents(i)
-      if (c.length == n) {
-        var acc = 0.0
-        var j = 0
-        while (j < n) {
-          val x = if (childIsFloat) a.getFloat(j).toDouble else a.getDouble(j)
-          acc += x * c(j)
-          j += 1
-        }
-        val d = sumsq(i) - 2.0 * acc
+      if (cents(i).numElements() == n) {
+        val d = sumsq(i) - 2.0 * Kernels.dot(a, childIsFloat, cents(i), false)
         if (best < 0 || java.lang.Double.compare(d, bestD) < 0) {
           best = i; bestD = d
         }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   *
   * Bit-identical to the composed form
   * `aggregate(zip_with(a,b,(x,y)->x*y), 0d, (acc,x)->acc+x)`: a sequential
-  * left-to-right double accumulation. The win is mechanical: no
+  * left-to-right double accumulation ([[Kernels.dot]], the one loop both
+  * eval paths and the driver tier call). The win is mechanical: no
   * intermediate product array, no higher-order-function lambda dispatch —
   * one fused loop over the two ArrayData buffers inside whole-stage
   * codegen. At 100 TB the scored scan is dot-product-bound, so this is the
@@ -48,44 +49,18 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val (lf, rf) = (isFloat(left), isFloat(right))
-    var acc = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      acc += x * y
-      i += 1
-    }
-    acc
+    if (a.numElements() != b.numElements()) null
+    else Kernels.dot(a, isFloat(left), b, isFloat(right))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // fresh names: two instances of this expression can share one codegen
-      // function scope, where a hardcoded `i` is a Janino redefinition error
-      // (silent fallback to interpreted eval — the exact cost this native
-      // expression exists to avoid)
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val lGet = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val rGet = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  int $n = $a.numElements();
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $lGet * $rGet;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.numElements() != $b.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.functions.Kernels.dot($a, ${isFloat(left)}, $b, ${isFloat(right)});
+       |}
+     """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =

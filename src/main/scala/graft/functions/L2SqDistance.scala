@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *
   * Bit-identical to the composed form
   * `aggregate(zip_with(a,b,(x,y)->(x-y)*(x-y)), 0d, (acc,x)->acc+x)`: one
-  * sequential left-to-right double accumulation — the property the DuckDB
-  * correctness oracle relies on. Squared distance (no final sqrt): the
+  * sequential left-to-right double accumulation ([[Kernels.l2sq]]) — the
+  * property the DuckDB correctness oracle relies on. Squared distance (no final sqrt): the
   * top-k order is identical, sqrt is monotone, and Milvus L2 scores are
   * squared distances too.
   *
@@ -47,45 +47,18 @@ case class L2SqDistance(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) return null
-    val (lf, rf) = (isFloat(left), isFloat(right))
-    var acc = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y
-      acc += d * d
-      i += 1
-    }
-    acc
+    if (a.numElements() != b.numElements()) null
+    else Kernels.l2sq(a, isFloat(left), b, isFloat(right))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // fresh names — see DotProduct.doGenCode: hardcoded locals collide
-      // when two instances share a codegen function scope
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val lGet = if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val rGet = if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  int $n = $a.numElements();
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = $lGet - $rGet;
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+       |if ($a.numElements() != $b.numElements()) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = graft.functions.Kernels.l2sq($a, ${isFloat(left)}, $b, ${isFloat(right)});
+       |}
+     """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2SqDistance =

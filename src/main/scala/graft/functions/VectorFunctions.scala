@@ -20,7 +20,7 @@ object VectorFunctions {
   /** Inner product of two ARRAY<numeric> columns, accumulated sequentially in
     * DOUBLE. The reference's Milvus `MetricType.IP` scoring
     * (`searcher.js:104`). Codegen'd; for the hot search path see also the
-    * native expression in [[graft.functions.FastDot]].
+    * native expression [[graft.functions.DotProduct]] (`fast_dot`).
     */
   def dot(a: Column, b: Column): Column =
     aggregate(

@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.functions.Kernels
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 /** Top-k inner-product / cosine search over an embedding column — the
@@ -393,25 +395,15 @@ object IvfIndex {
     // would take() an empty probe set and the search would return zero
     // rows silently
     require(nprobe >= 1, s"nprobe $nprobe must be >= 1")
-    val q = query.toArray
-    def ip(c: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < math.min(c.length, q.length)) { acc += c(i) * q(i); i += 1 }
-      acc
-    }
-    def l2sq(c: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < math.min(c.length, q.length)) {
-        val d = c(i) - q(i); acc += d * d; i += 1
-      }
-      acc
-    }
-    val scored = model.centroids.zipWithIndex.map { case (c, i) =>
+    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    val scored = model.centroids.zipWithIndex.map { case (c0, i) =>
+      val c = UnsafeArrayData.fromPrimitiveArray(c0)
       val s = metric match {
-        case VectorMetric.Ip     => ip(c)
+        case VectorMetric.Ip     => Kernels.dot(c, false, q, false)
         case VectorMetric.Cosine =>
-          ip(c) / math.max(math.sqrt(c.map(x => x * x).sum), 1e-300)
-        case VectorMetric.L2     => l2sq(c)
+          Kernels.dot(c, false, q, false) /
+            math.max(math.sqrt(Kernels.sumSq(c, false)), 1e-300)
+        case VectorMetric.L2     => Kernels.l2sq(c, false, q, false)
       }
       (i, s)
     }

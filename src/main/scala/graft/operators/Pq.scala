@@ -143,7 +143,8 @@ object Pq {
   }
 
   // shared with the driver-resident serving tier (graft.serving
-  // .LocalVector): one LUT construction for the expression and its replica
+  // .LocalVector), which sums these LUTs through the same
+  // graft.functions.Kernels.byteLutSum loop as the expression
   private[graft] def ipLut(model: Model, query: Seq[Double]): Seq[Double] =
     lut(model, query) { (cent, j) =>
       var acc = 0.0; var i = 0

@@ -96,9 +96,9 @@ object Sq8 {
     * Cosine = IP̂ / (√‖v̂‖² · ‖q‖); codes are never decoded on any path.
     */
   // The query-side parameter builders are shared with the driver-resident
-  // serving tier ([[graft.serving.LocalVector]]): ONE construction for both
-  // the Catalyst expression and its in-process replica, so they can never
-  // silently diverge.
+  // serving tier ([[graft.serving.LocalVector]]), which also scores through
+  // the expressions' own kernels ([[graft.functions.Kernels]]): one
+  // construction and one loop for both tiers.
 
   /** IP weights + bias: w = scale ⊙ q, bias = Σ minᵢ·qᵢ (left fold). */
   private[graft] def ipParams(model: Model, query: Seq[Double])

@@ -1,8 +1,8 @@
 package graft.plans
 
-import graft.functions.{ByteDot, ByteLutSum, DotProduct, L2SqDistance}
+import graft.functions.{ByteDot, ByteLutSum, DotProduct, Kernels, L2SqDistance}
 import graft.operators.{IvfIndex, Pq}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, Descending, Expression, In, Literal, SortDirection, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, Descending, Expression, In, Literal, SortDirection, SortOrder, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,8 +55,7 @@ object IvfRegistry {
   private def lutFp(flat: Array[Double]): String = {
     val bb = java.nio.ByteBuffer.allocate(flat.length * 8)
     flat.foreach(bb.putDouble)
-    java.security.MessageDigest.getInstance("MD5").digest(bb.array())
-      .map("%02x".format(_)).mkString
+    graft.functions.TextFunctions.md5Hex(bb.array())
   }
   def recordLut(flat: Seq[Double], kind: String): Unit =
     lutKinds.synchronized { lutKinds.put(lutFp(flat.toArray), kind); () }
@@ -120,11 +119,11 @@ case class IvfTopKRewrite() extends Rule[LogicalPlan] {
       e: Expression): Option[(Array[Double] => Double, Option[SortDirection])] =
     e.collectFirst {
       case DotProduct(_, Literal(q: ArrayData, _)) =>
-        (ipWith(q.toDoubleArray()) _, Some(Descending: SortDirection))
+        (ipWith(doubles(q)) _, Some(Descending: SortDirection))
       case ByteDot(_, Literal(w: ArrayData, _)) =>
-        (ipWith(w.toDoubleArray()) _, Some(Descending: SortDirection))
+        (ipWith(doubles(w)) _, Some(Descending: SortDirection))
       case L2SqDistance(_, Literal(q: ArrayData, _)) =>
-        (l2SqWith(q.toDoubleArray()) _, Some(Ascending: SortDirection))
+        (l2SqWith(doubles(q)) _, Some(Ascending: SortDirection))
     }.orElse(lutScorer(e))
 
   /** ADC (byte_lut_sum) scorer with metric-aware direction (ADVICE r10
@@ -150,12 +149,16 @@ case class IvfTopKRewrite() extends Rule[LogicalPlan] {
       }
       if (luts.isEmpty) None
       else {
-        def adc(flat: Array[Double])(c: Array[Double]): Double = {
-          val codes = Pq.encodeVec(pq, c)
-          var acc = 0.0
-          var j = 0
-          while (j < codes.length) { acc += flat(j * 256 + (codes(j) & 0xff)); j += 1 }
-          acc
+        // a LUT that does not fit the registered PQ model throws here, and
+        // rewriteSort's Try leaves the plan exact
+        def adc(flat: Array[Double]): Array[Double] => Double = {
+          val lut = UnsafeArrayData.fromPrimitiveArray(flat)
+          c => {
+            val codes = Pq.encodeVec(pq, c)
+            require(codes.length * 256 == flat.length,
+              s"LUT of ${flat.length} entries does not fit ${codes.length} PQ codes")
+            Kernels.byteLutSum(codes, lut)
+          }
         }
         // Metric is a PER-PLAN property read from the expression's own LUT
         // set — never from a cosine-specific kind on the shared registry:
@@ -168,22 +171,22 @@ case class IvfTopKRewrite() extends Rule[LogicalPlan] {
         val uniq = luts.map(_.toIndexedSeq).distinct.map(_.toArray)
         val kinds = uniq.map(l => (l, IvfRegistry.lutKind(l)))
         kinds.collectFirst { case (l, Some("dist")) => l } match {
-          case Some(l) => Some((adc(l) _, Some(Ascending: SortDirection)))
+          case Some(l) => Some((adc(l), Some(Ascending: SortDirection)))
           case None =>
             kinds.collectFirst { case (l, Some("ip")) => l } match {
               case Some(l) if uniq.length == 1 =>
                 // the score reads exactly one LUT and it's an IP table:
                 // plain inner-product ranking
-                Some((adc(l) _, Some(Descending: SortDirection)))
+                Some((adc(l), Some(Descending: SortDirection)))
               case Some(l) if kinds.exists(_._2.contains("cnorm")) =>
                 // ip + cnorm in ONE score is the cosine shape (Pq.score):
                 // centroid rank divides the ADC inner product by the true
                 // centroid norm (the query-norm factor is constant across
                 // centroids and drops out)
+                val ip = adc(l)
                 val cos = (c: Array[Double]) => {
-                  var n2 = 0.0; var i = 0
-                  while (i < c.length) { n2 += c(i) * c(i); i += 1 }
-                  if (n2 == 0.0) 0.0 else adc(l)(c) / math.sqrt(n2)
+                  val n2 = Kernels.sumSq(UnsafeArrayData.fromPrimitiveArray(c), false)
+                  if (n2 == 0.0) 0.0 else ip(c) / math.sqrt(n2)
                 }
                 Some((cos, Some(Descending: SortDirection)))
               case Some(_) =>
@@ -205,21 +208,14 @@ case class IvfTopKRewrite() extends Rule[LogicalPlan] {
       }
     }
 
-  private def ipWith(q: Array[Double])(c: Array[Double]): Double = {
-    val n = math.min(q.length, c.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += q(i) * c(i); i += 1 }
-    acc
-  }
+  private def doubles(lit: ArrayData): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(lit.toDoubleArray())
 
-  private def l2SqWith(q: Array[Double])(c: Array[Double]): Double = {
-    val n = math.min(q.length, c.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { val d = q(i) - c(i); acc += d * d; i += 1 }
-    acc
-  }
+  private def ipWith(q: ArrayData)(c: Array[Double]): Double =
+    Kernels.dot(q, false, UnsafeArrayData.fromPrimitiveArray(c), false)
+
+  private def l2SqWith(q: ArrayData)(c: Array[Double]): Double =
+    Kernels.l2sq(q, false, UnsafeArrayData.fromPrimitiveArray(c), false)
 
   /** Descending sorts rank centroids by score desc (IP-family); ascending
     * sorts rank asc (L2 distance — exact `fast_l2sq` or an ADC distance

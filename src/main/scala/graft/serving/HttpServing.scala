@@ -2,6 +2,7 @@ package graft.serving
 
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The wire scaffolding [[SearchService]] and [[HybridSearchService]]
@@ -10,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * anything thrown → 500) and of the JSON value escaping, so a fix to
   * any of them cannot silently miss one service (self-review r16 #4).
   */
-private[serving] object HttpServing {
+private[graft] object HttpServing {
 
   // TCP_NODELAY for the JDK server's response writes. Without it a small
   // JSON response sits in the kernel behind Nagle until the peer's
@@ -40,7 +41,8 @@ private[serving] object HttpServing {
 
   def jsonValue(v: Any): String = v match {
     case null                => "null"
-    case s: String           => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    case s: String           =>
+      "\"" + new String(JsonStringEncoder.getInstance().quoteAsString(s)) + "\""
     case f: Float            => f.toDouble.toString
     case n: java.lang.Number => n.toString
     case b: Boolean          => b.toString

@@ -28,9 +28,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *    as requests touch them (`maxTermDf`/`maxCachedPostings` — the Solr
   *    posture), and a request whose terms are all cached runs ZERO Spark
   *    jobs: BM25 scoring, cosine top-k, and RRF fusion are driver
-  *    arithmetic over at most Σ_t df(t) + |index| rows, every operation
-  *    a bit-exact replica of its Catalyst twin ([[LocalHybrid]]) so the
-  *    wire results equal the r4 batch pipeline verbatim.
+  *    arithmetic over at most Σ_t df(t) + |index| rows ([[LocalHybrid]]:
+  *    the cosine leg runs the Catalyst expressions' own kernels, the rest
+  *    replays the plan's operand order), so the wire results equal the r4
+  *    batch pipeline verbatim.
   *  - DISTRIBUTED fallback: anything the local tier cannot serve inside
   *    its budgets — an index over `maxLocalIndex`, a term over
   *    `maxTermDf`, a non-integral id column — runs the original batch
@@ -93,7 +94,7 @@ class HybridSearchService(
   private val spark = corpus.sparkSession
 
   // BM25's published defaults — the same constants searchIndex defaults
-  // to; the local replica must score with the identical values
+  // to; the local tier scores with the identical values
   private val K1 = 1.2
   private val B = 0.75
 
@@ -121,8 +122,7 @@ class HybridSearchService(
     case LongType | IntegerType => true
     case _ => false
   }
-  /** (id, emb, cluster) rows; cluster is -1 in exact mode. */
-  private val localIndex: Option[Array[(Long, Array[Double], Int)]] =
+  private val localIndex: Option[Array[LocalHybrid.DenseRow]] =
     if (!localServing || !idIsIntegral || denseCount > maxLocalIndex) None
     else Some {
       val hasCluster = denseIndex.columns.contains("cluster_id")
@@ -131,9 +131,8 @@ class HybridSearchService(
         else Seq(col(idCol), col("emb"))
       denseIndex.select(cols: _*).collect().map { r =>
         val id = r.get(0).asInstanceOf[Number].longValue()
-        val emb = r.getSeq[Double](1).toArray
         val cl = if (hasCluster) r.get(2).asInstanceOf[Number].intValue() else -1
-        (id, emb, cl)
+        LocalHybrid.denseRow(id, r.getSeq[Double](1).toArray, cl)
       }
     }
   /** (n_docs as double, avgdl) — the exact doubles searchIndex's stats
@@ -268,8 +267,8 @@ class HybridSearchService(
 
   /** The distributed fallback with CONCURRENT legs: the sparse probe and
     * the dense top-k are independent plans, so a fallback request runs
-    * them as two parallel Spark jobs and fuses driver-side with the
-    * bit-exact RRF replica — halving fallback latency vs the sequential
+    * them as two parallel Spark jobs and fuses driver-side with
+    * [[LocalHybrid.rrfFuse]] — halving fallback latency vs the sequential
     * single plan. Results equal [[hybridFrame]]'s (rrfFuse == Bm25.rrf
     * is LocalHybridSpec-pinned, and the localServing=false service runs
     * THIS path in the fast-vs-fallback wire-equality spec). Non-integral

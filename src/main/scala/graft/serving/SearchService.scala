@@ -3,9 +3,12 @@ package graft.serving
 import java.net.InetSocketAddress
 
 import com.sun.net.httpserver.HttpServer
+import graft.functions.Kernels
 import graft.multimodal.ImageOps
 import graft.operators.{AnnSearch, IvfIndex, Pq, Sq8, VectorMetric}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Serving layer (SURVEY §3.3, searcher.js): `POST /search` with raw image
@@ -98,8 +101,8 @@ class SearchService(
     metric: String = "ip",
     // Driver-resident serving tier (the LocalHybrid posture, VERDICT r17
     // #4): when the SERVED index fits under this row budget, requests are
-    // answered from in-process arrays with bit-exact replicas of the
-    // serving expressions ([[LocalVector]]) — no per-request Catalyst
+    // answered from in-process arrays through the serving expressions' own
+    // kernels ([[LocalVector]]) — no per-request Catalyst
     // planning or job scheduling. Over budget (or an exotic id type) every
     // request falls back to the distributed plan, identical results.
     // 0 disables.
@@ -320,12 +323,13 @@ class SearchService(
 
   /** In-process snapshot of the SERVED layout: positional arrays, one
     * entry per served row. `outs` carries the keepCols projection the
-    * wire emits; `vecs`/`codes`/`clusters` are null when the mode's plan
-    * does not scan them.
+    * wire emits; `vecs` (float vectors, converted once for the kernels),
+    * `codes` and `clusters` are null when the mode's plan does not scan
+    * them.
     */
   private final case class LocalIdx(
       outs: Array[Array[Any]], ids: Array[Any],
-      vecs: Array[Array[Float]], codes: Array[Array[Byte]],
+      vecs: Array[ArrayData], codes: Array[Array[Byte]],
       clusters: Array[Int], idLt: (Any, Any) => Boolean,
       // the distributed result's schema (keepCols + score), so local rows
       // answer fieldIndex/getAs like a collected plan row
@@ -397,7 +401,9 @@ class SearchService(
     Some(LocalIdx(
       outs = rows.map(r => Array.tabulate[Any](k)(r.get)),
       ids = rows.map(_.get(keepCols.indexOf(idCol))),
-      vecs = if (needVec) rows.map(_.getSeq[Float](vecAt).toArray) else null,
+      vecs = if (needVec) rows.map(r =>
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](vecAt).toArray): ArrayData)
+        else null,
       codes = if (needCodes) rows.map(_.getAs[Array[Byte]](codesAt)) else null,
       clusters = if (clusterAt >= 0) rows.map(_.getInt(clusterAt)) else null,
       idLt = idLt,
@@ -416,21 +422,22 @@ class SearchService(
   private[graft] def localTierActive: Boolean = local.nonEmpty
 
   /** Serve one query from the in-process snapshot — the searchFrame plan
-    * replayed with [[LocalVector]]'s bit-exact scorers and the identical
-    * (score, id) ranking.
+    * replayed with [[LocalVector]]'s scorers (the expressions' kernels)
+    * and the identical (score, id) ranking.
     */
   private def localSearch(li: LocalIdx, q: Array[Float]): Seq[Row] = {
     val qd: IndexedSeq[Double] = q.map(_.toDouble).toIndexedSeq
-    val qda = qd.toArray
-    val qn = math.sqrt(qd.map(x => x * x).sum)
-    def emit(cand: Array[Int], scores: Array[Double], n: Int): Seq[Row] = {
-      val ids: Array[Any] = cand.map(li.ids(_))
-      val kept = LocalVector.rank(scores, ids, vecMetric.descending, li.idLt, n)
-      kept.toIndexedSeq.map { j =>
+    val qda = LocalVector.arrayData(qd)
+    val qn = math.sqrt(Kernels.sumSq(qda, false))
+    // (score, id) order over candidate positions
+    def rank(cand: Array[Int], scores: Array[Double], n: Int): Array[Int] =
+      LocalVector.rank(scores, vecMetric.descending,
+        (a, b) => li.idLt(li.ids(cand(a)), li.ids(cand(b))), n)
+    def emit(cand: Array[Int], scores: Array[Double], n: Int): Seq[Row] =
+      rank(cand, scores, n).toIndexedSeq.map { j =>
         new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
           li.outs(cand(j)) :+ (scores(j): Any), li.rowSchema): Row
       }
-    }
     def exactOver(cand: Array[Int], n: Int): Seq[Row] =
       emit(cand, cand.map(i =>
         LocalVector.exactScore(li.vecs(i), qda, vecMetric, qn)), n)
@@ -452,9 +459,7 @@ class SearchService(
               // phase 1: quantized top-`rerank` ids; phase 2: exact
               // re-score of exactly those candidate rows — the same
               // two-phase shape as the distributed plan
-              val ids = cand.map(li.ids(_)): Array[Any]
-              val keep = LocalVector.rank(coarse, ids, vecMetric.descending,
-                li.idLt, rerank).map(j => cand(j))
+              val keep = rank(cand, coarse, rerank).map(j => cand(j))
               val idSet = keep.map(li.ids(_)).toSet
               exactOver(cand.filter(i => idSet.contains(li.ids(i))), topK)
             } else emit(cand, coarse, topK)

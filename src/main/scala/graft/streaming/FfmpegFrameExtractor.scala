@@ -136,9 +136,7 @@ object FfmpegFrameExtractor extends FrameFeatureExtractor {
     if (d == null) ("", "")
     else {
       val q = d.map(v => math.min(255, math.max(0, math.round(v * 255))).toInt)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hi = md.digest(q.map(_.toByte))
-        .map("%02x".format(_)).mkString
+      val hi = graft.functions.TextFunctions.md5Hex(q.map(_.toByte))
       (hi, graft.multimodal.BitSampling.hexCodes(d))
     }
   }

@@ -53,13 +53,12 @@ object IngestPipeline {
     val Fps = 12 // hasher.js:87
     def extract(imdbId: String, fileName: String, bytes: Array[Byte]): Iterator[RawFrame] = {
       val durationSec = math.max(1, bytes.length / 1024) // ??? real: ffprobe
-      val md = java.security.MessageDigest.getInstance("MD5")
       (0 until durationSec * Fps).iterator.map { i =>
         val t = i.toDouble / Fps
         // every 4th frame repeats the previous hash to exercise dedup
         val effective =
           if (i % 4 == 3) s"$imdbId/$fileName/${i - 1}" else s"$imdbId/$fileName/$i"
-        val h2 = md.digest(effective.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        val h2 = graft.functions.TextFunctions.md5Hex(effective.getBytes("UTF-8"))
         val ha = (0 until 100).map { d =>
           Integer.parseInt(h2.substring((d * 3) % 29, (d * 3) % 29 + 3), 16).toHexString
         }.mkString(" ")

@@ -129,4 +129,43 @@ class IncrementalDedupSpec extends SparkSpec {
         s"observe metric must account the dropped members, got $dropped; seen=${seen.toMap}")
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("scan prune vehicle: InListPruneMax keys ride an In-list, one more rides bloom_probe") {
+    import org.apache.spark.sql.catalyst.expressions.In
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val max = IncrementalDedup.InListPruneMax
+    // lake: 600 keys with one member each, the even keys with a second
+    // member too; a delta touches keys 0 until nKeys, one doc per key,
+    // plus a second doc on key 1 (a delta-delta pair, no extra key)
+    val lake = (0 until 600).flatMap { k =>
+      val row = (k.toLong, k % 4, s"sig$k")
+      if (k % 2 == 0) Seq(row, (1000L + k, k % 4, s"sig$k")) else Seq(row)
+    }.toDF("doc_id", "band", "bsig")
+    def delta(nKeys: Int) = ((0 until nKeys).map(k => (5000L + k, k % 4, s"sig$k")) :+
+      ((9999L, 1, "sig1"))).toDF("doc_id", "band", "bsig")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Seq(max, max + 1).foreach { nKeys =>
+      val d = delta(nKeys)
+      assert(d.select("bsig").distinct().count() == nKeys)
+      val pruned = IncrementalDedup.deltaPairs(lake, d, "doc_id")
+      val plan = pruned.queryExecution.analyzed
+      val inLists = plan.collect { case Filter(In(_, list), _) => list.size }
+      val blooms = plan.flatMap(_.expressions.flatMap(
+        _.collect { case e if e.prettyName == "bloom_probe" => e }))
+      if (nKeys <= max) {
+        assert(inLists.nonEmpty && inLists.forall(_ == nKeys), s"In-lists: $inLists")
+        assert(blooms.isEmpty, "an In-list delta must not carry bloom_probe")
+      } else {
+        assert(inLists.isEmpty, s"a Bloom delta must not carry an In-list: $inLists")
+        assert(blooms.nonEmpty, "past InListPruneMax the lake scan must probe the Bloom filter")
+      }
+      val got = pairs(pruned)
+      val want = pairs(IncrementalDedup.deltaPairs(lake, d, "doc_id", scanPruneMax = 0))
+      assert(got == want, s"$nKeys keys: missing=${want -- got} extra=${got -- want}")
+      // each delta key k pairs with lake doc k (and 1000 + k when even);
+      // doc 9999 pairs with lake doc 1 and delta doc 5001
+      assert(got.size == nKeys + (nKeys + 1) / 2 + 2, s"$nKeys keys: ${got.size} pairs")
+    }
+  }
 }

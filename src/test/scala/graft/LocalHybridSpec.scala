@@ -39,12 +39,12 @@ class LocalHybridSpec extends SparkSpec {
   test("hash60 + tokensOf + docEmbedLocal == ChunkEmbed.docEmbed") {
     val texts = Seq("", " ", "a  b", "the the the") ++
       Seq.fill(20)(randText())
-    // hash60 replica vs the SQL expression
+    // the JVM hash60 vs the SQL expression
     val words = texts.flatMap(LocalHybrid.tokensOf).distinct
     val wantH = words.toDF("w")
       .select(graft.functions.TextFunctions.hash60($"w")).collect()
       .map(_.getLong(0)).toSeq
-    words.map(LocalHybrid.hash60).zip(wantH).zip(words).foreach {
+    words.map(graft.functions.TextFunctions.hash60Local).zip(wantH).zip(words).foreach {
       case ((g, w), word) => assert(g == w, s"hash60('$word'): $g vs $w")
     }
     // full embedding parity
@@ -104,7 +104,7 @@ class LocalHybridSpec extends SparkSpec {
       else Array.fill(dim)((rnd.nextInt(7) - 3).toDouble))
     }
     val baseDf = base.toDF("id", "emb")
-    val local = base.map { case (id, e) => (id, e, -1) }.toArray
+    val local = base.map { case (id, e) => LocalHybrid.denseRow(id, e, -1) }.toArray
     (1 to 4).foreach { qi =>
       val qv = Array.fill(dim)((rnd.nextInt(7) - 3).toDouble)
       val got = LocalHybrid.denseRank(local, null, qv, 12).toSeq
@@ -155,6 +155,29 @@ class LocalHybridSpec extends SparkSpec {
       val slow = serve(local = false, mode)
       assert(fast == slow, s"mode $mode:\nfast=$fast\nslow=$slow")
     }
+  }
+
+  test("service row budget edge: maxLocalIndex = n serves locally, n - 1 falls back, same rows") {
+    val docs = (0L until 20L).map(i => (i, randText())).toDF("doc_id", "text")
+    val dir = graft.sources.TempDirs.register(
+      s"/tmp/graft_localhybrid_edge_${ProcessHandle.current().pid()}")
+    Bm25.save(Bm25.fit(docs, "doc_id", "text"), dir, numFiles = 2)
+    val n = ChunkEmbed.docEmbed(docs, "doc_id", "text", 64).count()
+    def service(budget: Long) = new graft.serving.HybridSearchService(
+      docs, "doc_id", "text", dir, k = 8, fetchK = 15, maxLocalIndex = budget)
+    val at = service(n)
+    val below = service(n - 1)
+    val dist = service(0L)
+    try {
+      assert(at.isLocalTier, s"$n embeddings fit a budget of $n")
+      assert(!below.isLocalTier, s"$n embeddings exceed a budget of ${n - 1}")
+      assert(!dist.isLocalTier)
+      Seq.fill(4)(randText()).foreach { q =>
+        val want = dist.search(q)
+        assert(at.search(q) == want, s"budget n, query '$q'")
+        assert(below.search(q) == want, s"budget n - 1, query '$q'")
+      }
+    } finally { at.stop(); below.stop(); dist.stop() }
   }
 
   test("TermCache: LRU row budget evicts; oversize refuses; overCap caches") {
