@@ -14,6 +14,17 @@ import org.apache.spark.sql.SparkSession
   *    oracle (naive TIMESTAMP), independent of session zone.
   *  - AQE is on (default) — coalesces post-shuffle partitions and re-plans
   *    skew joins, the behavior we rely on at cluster scale.
+  *  - The coalescing floor is one byte, so no exchange coalesces below
+  *    `defaultParallelism`. AQE sizes post-shuffle partitions by map-side
+  *    bytes, and Spark's 1 MB `minPartitionSize` default overrides the
+  *    `defaultParallelism` floor whenever a shuffle is small. Stages whose
+  *    work amplifies after the shuffle (shingle explosion, per-word
+  *    lattices, O(b²) pair emission) then ran on ONE task. Measured in
+  *    Spark 4.1.2 at `local[4]`, `shuffle.partitions=4`: a 5,000-key
+  *    `groupBy` (ENSURE_REQUIREMENTS) and a `repartition(col)`
+  *    (REPARTITION_BY_COL) both read their shuffle on 1 partition at the
+  *    default and on 4 with the floor. This one setting is the engine's
+  *    parallelism policy; operators repartition only to move rows.
   */
 object GraftSession {
   // TCP_NODELAY for any JDK HttpServer the serving layer starts in this
@@ -45,6 +56,7 @@ object GraftSession {
         s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
       .config("spark.ui.enabled", "false")
 
   def local(): SparkSession = {

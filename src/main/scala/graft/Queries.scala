@@ -1124,11 +1124,14 @@ object Queries {
     // spread WITH a barrier before the row-local gate: the documents
     // parquet is one ~600 KB single-row-group file (scan floor: 1 task)
     // and the interpreted shingle/bloom HOF predicate costs ~0.6 ms/doc;
-    // a plain repartition is silently defeated — Catalyst pushes the
-    // filter back below the exchange — so Spread.barrier pins the gate
-    // above it (measured 3.0 s → sub-second on 32 cores).
-    operators.Spread.barrier(
-        Tables.documents(s, d).where($"doc_id" % 10 =!= 0), Seq($"doc_id"))
+    // a plain repartition is silently defeated — Catalyst pushes
+    // deterministic filters back through RepartitionByExpression, so the
+    // predicate would evaluate at the scan on one task. The lazy
+    // localCheckpoint is an optimizer barrier: the cheap pre-filter rows
+    // are materialized once at full parallelism and the gate runs above
+    // it (measured 3.0 s → sub-second on 32 cores).
+    Tables.documents(s, d).where($"doc_id" % 10 =!= 0)
+      .repartition($"doc_id").localCheckpoint(eager = false)
       .where(!TextDedup.contaminatedCol($"text", 5, ensureBenchBloom(s, d)))
       .select($"doc_id")
       .orderBy($"doc_id")
@@ -1427,15 +1430,7 @@ object Queries {
     val docs = Tables.documents(s, d)
     val queries = hashedChunkEmb(docs.where($"doc_id" < 3))
       .select($"cid".as("qid"), $"emb")
-    // spread the freshly-built corpus before the broadcast scoring
-    // product: AQE coalesces the embed aggregate to ONE partition
-    // (embedding-sized map bytes) and the |chunks|×|queries| scoring ran
-    // serially (a measured 1.3–2.2 s single-task stage, r19); the serving
-    // path's cached index keeps batchTopK exchange-free, so the spread
-    // belongs at this build-side call, not in the operator
-    AnnSearch.batchTopK(
-      operators.Spread.byCols(
-        hashedChunkEmb(docs.where($"doc_id" >= 3)), Seq($"cid")),
+    AnnSearch.batchTopK(hashedChunkEmb(docs.where($"doc_id" >= 3)),
       "emb", "cid", queries, "qid", "emb", 5, VectorMetric.Cosine)
   }
 
@@ -3738,7 +3733,7 @@ object Queries {
   val t5Repetition: Q = (s, d) => {
     import s.implicits._
     val toks = tokens($"text")
-    operators.Spread.byCols(Tables.documents(s, d), Seq($"doc_id"))
+    Tables.documents(s, d).repartition($"doc_id")
       .select($"doc_id",
         round(dupTokenFrac(toks), 6).as("dup_token_frac"),
         round(topNgramFrac(toks, 2), 6).as("top2gram_frac"),

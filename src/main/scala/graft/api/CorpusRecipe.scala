@@ -2,7 +2,7 @@ package graft.api
 
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
-import graft.operators.{LineDedup, QualityClassifier, Sampling, SequencePack, Spread, TextDedup}
+import graft.operators.{LineDedup, QualityClassifier, Sampling, SequencePack, TextDedup}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +39,7 @@ final class CorpusRecipe private (
     * interpreted-HOF signals cost ~1 ms/doc — don't leave their
     * parallelism to the scan's split count).
     */
-  def spread(): CorpusRecipe = next(Spread.byCols(frame, Seq(col(idCol))))
+  def spread(): CorpusRecipe = next(frame.repartition(col(idCol)))
 
   /** t1's stopword-argmax language pick as a column. */
   def scoreLanguage(out: String = "pred"): CorpusRecipe =
@@ -232,7 +232,7 @@ final class CorpusRecipe private (
     // the whole upstream chain (r19; the pinned set is corpus-sized, the
     // same posture as passageScrub's own internal checkpoints).
     // LAZY (ADVICE r19): eager=false truncates lineage and dedupes the
-    // three references at first action (the Spread.barrier precedent).
+    // three references at first action (the Queries.e9cCleanGate precedent).
     // Under AQE it defers only the RESULT stage: the checkpoint plans the
     // upstream through AdaptiveSparkPlanExec, which runs every upstream
     // shuffle map stage at composition time; and passageScrub's eager sh

@@ -37,7 +37,7 @@ object Bm25 {
     * tf, dl). The one docs-grain shuffle of the index build.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    Spread.byCols(docs, Seq(col(idCol)))
+    docs.repartition(col(idCol))
       .select(col(idCol), size(tokens(col(textCol))).cast("long").as("dl"),
         explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))

@@ -410,11 +410,9 @@ object BpeTrain {
     val session = words.sparkSession
     import session.implicits._
     val bc = session.sparkContext.broadcast(merges.toArray)
-    // Spread BEFORE the merge-apply pass: a distinct/groupBy input's
-    // map-side bytes look tiny, so AQE coalesces it to ONE partition
-    // while the per-word merge loop amplifies beyond bytes (the Spread
-    // scaladoc's case; measured serial ~0.4 s stages, r19)
-    Spread.byCols(words.select(col("word").cast("string")), Seq(col("word")))
+    // spread BEFORE the merge-apply pass: the per-word merge loop
+    // amplifies far beyond the input's bytes
+    words.select(col("word").cast("string")).repartition(col("word"))
       .as[String]
       .mapPartitions { it =>
         val ms = bc.value
@@ -618,12 +616,7 @@ object BpeTrain {
       .select(col("word"), col("pos").as("__tpos"), col("col").as("token"))
     import spark.implicits._
     val ids = vocab(model).toDF("token", "token_id")
-    // spread on the window key before the per-doc position window — the
-    // TokenExport discipline (AQE otherwise coalesces the window's
-    // exchange to one partition and the sort + row_number run serially)
-    Spread.byCols(
-        words.join(perTok, "word").join(broadcast(ids), "token"),
-        Seq(col(idCol)))
+    words.join(perTok, "word").join(broadcast(ids), "token")
       .withColumn("pos", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
           .orderBy(col("__wpos"), col("__tpos"))).cast("long") - 1)

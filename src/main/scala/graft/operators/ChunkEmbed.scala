@@ -42,18 +42,10 @@ object ChunkEmbed {
     * the sd2 and r-family gate rows.
     */
   private def bagOfWords(tok: DataFrame, keyCol: String, dim: Int): DataFrame =
-    // the explicit spread between the two groupBys replaces the second
-    // exchange (clustering on keyCol is satisfied) and keeps AQE from
-    // coalescing it to one partition: the dense-assemble transform —
-    // an interpreted dim-entry HOF per chunk — is fused onto the final
-    // aggregate's stage and ran serially there (a measured 1.4–2.5 s
-    // single-task stage inside r1, r19)
-    Spread.byCols(
-        tok.select(col(keyCol), hash60(col("t")).as("h"))
-          .select(col(keyCol), (col("h") % dim).as("b"),
-            when(shiftright(col("h"), 6) % 2 === 0, 1.0).otherwise(-1.0).as("sgn"))
-          .groupBy(col(keyCol), col("b")).agg(sum(col("sgn")).as("v")),
-        Seq(col(keyCol)))
+    tok.select(col(keyCol), hash60(col("t")).as("h"))
+      .select(col(keyCol), (col("h") % dim).as("b"),
+        when(shiftright(col("h"), 6) % 2 === 0, 1.0).otherwise(-1.0).as("sgn"))
+      .groupBy(col(keyCol), col("b")).agg(sum(col("sgn")).as("v"))
       .groupBy(col(keyCol))
       .agg(map_from_entries(collect_list(struct(col("b"), col("v")))).as("m"))
       .select(col(keyCol), transform(sequence(lit(0), lit(dim - 1)),
@@ -69,7 +61,7 @@ object ChunkEmbed {
                textCol: String = "text", dim: Int = 64): DataFrame = {
     require(dim > 0, s"dim must be positive, got $dim")
     bagOfWords(
-      Spread.byCols(df, Seq(col(idCol)))
+      df.repartition(col(idCol))
         .select(col(idCol), explode(tokens(col(textCol))).as("t")),
       idCol, dim)
   }
@@ -93,7 +85,7 @@ object ChunkEmbed {
     // chunk/token explode and the 1-md5-per-token hashing otherwise run on
     // the scan's split count — one task for a single-row-group gate file.
     // Generators don't push back through the repartition, so no barrier is
-    // needed here (unlike a predicate — see Spread.barrier).
+    // needed here (unlike a predicate — see Queries.e9cCleanGate).
     // the key-domain guard the composite key needs (ADVICE r13): a
     // negative id, an id >= Long.MaxValue/KeySpan, or a document with
     // >= KeySpan chunks would silently alias cid across documents and
@@ -117,7 +109,7 @@ object ChunkEmbed {
         lit(s" chunk "), chunkIdx.cast("string"),
         lit(s" outside id in [0, $maxId) x chunk < $KeySpan — " +
           "cid keys would alias across documents"))))
-    val chunks = Spread.byCols(df, Seq(col(idCol)))
+    val chunks = df.repartition(col(idCol))
       .select(col(idCol), toks.as("w"), explode(starts).as("st"))
       .select(cid.as("cid"),
         slice(col("w"), col("st") + 1, lit(chunkLen)).as("ct"))

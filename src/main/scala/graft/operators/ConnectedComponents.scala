@@ -226,7 +226,6 @@ object ConnectedComponents {
       canon(linked)
     }
 
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     var edges = canon(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))).localCheckpoint()
     var sig = signature(edges)
@@ -237,15 +236,12 @@ object ConnectedComponents {
       // star per component, so the moment the surviving edge set is small
       // enough, union-find on the driver finishes the job exactly.
       if (sig._1 <= localThreshold) return finishLocal(vertices, idName, edges)
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nsig = signature(next)
       done = nsig == sig
       sig = nsig
       edges = next
       i += 1
-      if (dbg) System.err.println(
-        f"[cc] round $i edges=${nsig._1} ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     // Fixpoint is a star: every non-root points at its component min.
     vertices.select(col(idName).as("id"))

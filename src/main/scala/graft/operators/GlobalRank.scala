@@ -22,9 +22,7 @@ object GlobalRank {
     */
   def withGlobalIndex(df: DataFrame, orderCols: Seq[Column], idxName: String): DataFrame = {
     val spark = df.sparkSession
-    val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val sorted = df.repartitionByRange(n, orderCols: _*).sortWithinPartitions(orderCols: _*)
+    val sorted = df.repartitionByRange(orderCols: _*).sortWithinPartitions(orderCols: _*)
     val out = sorted.schema.add(idxName, LongType, nullable = false)
     val rdd = sorted.rdd.zipWithIndex().map { case (row, i) => Row.fromSeq(row.toSeq :+ i) }
     spark.createDataFrame(rdd, out)

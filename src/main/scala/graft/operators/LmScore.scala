@@ -50,7 +50,7 @@ object LmScore {
     // spread ahead of the explode: the bigram amplification and its
     // map-side combine otherwise run at the scan's split count (one task
     // per row group on a small gate file) — the t5/p3 rule
-    val toks = Spread.byCols(docs, Seq(col(textCol)))
+    val toks = docs.repartition(col(textCol))
       .select(tokens(col(textCol)).as("w"))
     // ONE corpus scan + ONE aggregation for both orders, materialized
     // once (the NgramLm.fit r19 shape): the previous two aggregations
@@ -94,7 +94,7 @@ object LmScore {
     */
   def score(docs: DataFrame, idCol: String, textCol: String, model: Model): DataFrame = {
     // same spread rule as fit; also pre-aligns the per-doc groupBy
-    val bg = Spread.byCols(docs, Seq(col(idCol)))
+    val bg = docs.repartition(col(idCol))
       .select(col(idCol), posexplode(bigramPairs(tokens(col(textCol)))))
       .select(col(idCol), col("pos"), col("col.w1").as("w1"), col("col.w2").as("w2"))
     val logp = log(

@@ -99,7 +99,7 @@ object NgramLm {
     // spread ahead of the explode — the t5/p3 rule: the 3× position
     // amplification and its map-side combine otherwise run at the scan's
     // row-group split count
-    val toks = Spread.byCols(docs, Seq(col(textCol)))
+    val toks = docs.repartition(col(textCol))
       .select(tokens(col(textCol)).as("w"))
     val gram = "struct<ord:int,w1:string,w2:string,w3:string>"
     val grams = toks.select(explode(concat(
@@ -165,7 +165,7 @@ object NgramLm {
       col("c1").as("c1last"))
     val total = model.unigrams.agg(sum(col("c1")).as("n_total"))
 
-    val pos = Spread.byCols(docs, Seq(col(idCol)))
+    val pos = docs.repartition(col(idCol))
       .select(col(idCol), posexplode(trigramTriples(tokens(col(textCol)))))
       .select(col(idCol), col("pos"), col("col.w1").as("w1"),
         col("col.w2").as("w2"), col("col.w3").as("w3"))
@@ -270,7 +270,7 @@ object NgramLm {
     val d3 = discount(model.trigrams, "c3", "d3")
     val d2 = discount(model.bigrams, "c2", "d2")
 
-    val pos = Spread.byCols(docs, Seq(col(idCol)))
+    val pos = docs.repartition(col(idCol))
       .select(col(idCol), posexplode(trigramTriples(tokens(col(textCol)))))
       .select(col(idCol), col("pos"), col("col.w1").as("w1"),
         col("col.w2").as("w2"), col("col.w3").as("w3"))

@@ -160,12 +160,10 @@ object Sampling {
       Iterator.iterate(base)(_ + "_").dropWhile(df.columns.contains).next()
     val drawName = temp("__tb_draw")
     val tokName = temp("__tb_tok")
-    val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
     val sorted = df
       .withColumn(drawName, drawHex(col(idCol)))
       .withColumn(tokName, col(tokenCol).cast("long"))
-      .repartitionByRange(n, col(stratumCol), col(drawName), col(idCol))
+      .repartitionByRange(col(stratumCol), col(drawName), col(idCol))
       .sortWithinPartitions(col(stratumCol), col(drawName), col(idCol))
     val schema = sorted.schema
     val si = schema.fieldIndex(stratumCol)

@@ -60,10 +60,8 @@ object SequencePack {
       .select(col(idCol), col(tokenCol).cast("long").as("tokens"))
       .where(col("tokens") > 0)
       .withColumn(drawName, Sampling.drawHex(col(idCol)))
-    val n = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
     val sorted = base
-      .repartitionByRange(n, col(drawName), col(idCol))
+      .repartitionByRange(col(drawName), col(idCol))
       .sortWithinPartitions(col(drawName), col(idCol))
     val ti = sorted.schema.fieldIndex("tokens")
     val rdd = sorted.rdd // ONE conversion — both jobs share the shuffle

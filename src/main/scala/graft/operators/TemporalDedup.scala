@@ -45,10 +45,14 @@ object TemporalDedup {
       windowSec: Double,
       lookback: Int = 24,
       tiebreakCols: Seq[String] = Nil): DataFrame = {
+    // with no columns the repartition is round-robin: one entity's frames
+    // would scatter over every partition and each slice dedup on its own
+    require(groupCols.nonEmpty,
+      "groupCols must name the entity whose frames form one timeline (e.g. the video)")
     val spark = df.sparkSession
     val schema = df.schema
     val sortCols: Seq[Column] = (groupCols ++ (timeCol +: tiebreakCols)).map(col)
-    val sorted = Spread.byCols(df, groupCols.map(col))
+    val sorted = df.repartition(groupCols.map(col): _*)
       .sortWithinPartitions(sortCols: _*)
     val gIdx = groupCols.map(schema.fieldIndex)
     val tIdx = schema.fieldIndex(timeCol)

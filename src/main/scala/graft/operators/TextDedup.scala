@@ -28,9 +28,9 @@ object TextDedup {
     *     pre-aligns the downstream per-doc groupBy/window so they reuse the
     *     hash partitioning instead of shuffling again.
     */
-  /** One (id, pos, t) row per token, parallelism pinned. */
+  /** One (id, pos, t) row per token, spread by id. */
   private def tokenRows(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    Spread.byCols(df, Seq(col(idCol)))
+    df.repartition(col(idCol))
       .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "t")))
 
   /** Shingle assembly over [[tokenRows]] output: posexplode + lead() keeps
@@ -84,7 +84,7 @@ object TextDedup {
       k: Int, shingleK: Int): DataFrame = {
     val sketch = udf((t: String) => minhashSketch(t, k, shingleK))
     val aggs = (0 until k).map(j => min(col("__sig")(j)).as(s"m$j"))
-    Spread.byCols(df, Seq(col(idCol)))
+    df.repartition(col(idCol))
       .select(col(idCol), sketch(col(textCol)).as("__sig"))
       .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
       .where(col("m0").isNotNull)
@@ -158,11 +158,7 @@ object TextDedup {
       metricName: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(smallCap >= 2, "smallCap must be >= 2")
-    // spread on the bucket key so the size window (and the cell explode
-    // fused onto its stage) runs at deliberate parallelism — AQE would
-    // coalesce the window's exchange on map-side bytes, the wrong proxy
-    // for a stage whose downstream pair emission amplifies O(b²) (r19)
-    val sized = Spread.byCols(buckets, Seq(col("__bk")))
+    val sized = buckets
       .withColumn("__bsz", count(lit(1)).over(Window.partitionBy(col("__bk"))))
       .observe(metricName,
         max(col("__bsz")).as("max_bucket"),
@@ -183,11 +179,10 @@ object TextDedup {
     // The cell re-shuffle must be EXPLICIT: hash-partitioning on __bk alone
     // already satisfies the (bk, lo, hi) clustering requirement, so Catalyst
     // would otherwise keep every cell of a bucket on the bucket's task —
-    // bounding memory but not distributing the O(b²) emission (and AQE can
-    // coalesce the small bucket shuffle to ONE task for the whole stage).
+    // bounding memory but not distributing the O(b²) emission.
     // Spreading on exactly (bk, lo, hi) makes this the ONLY shuffle: the
     // groupBy's clustering requirement is satisfied by it.
-    val spread = Spread.byCols(cells, Seq(col("__bk"), col("lo"), col("hi")))
+    val spread = cells.repartition(col("__bk"), col("lo"), col("hi"))
     spread
       .groupBy(col("__bk"), col("lo"), col("hi"))
       .agg(sort_array(collect_list(struct(col("__m").as("m"), col("__g").as("g")))).as("xs"))
@@ -208,7 +203,7 @@ object TextDedup {
     * transform lambda runs interpreted; measured 10× slower).
     */
   def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val tok = Spread.byCols(df, Seq(col(idCol)))
+    val tok = df.repartition(col(idCol))
       .select(col(idCol), explode(tokens(col(textCol))).as("t"))
     val h = tok.select(col(idCol), hash60(col("t")).as("hv"))
     val bitAggs = (0 until 60).map { b =>
@@ -450,14 +445,8 @@ object TextDedup {
     // checkpoint boundaries; the kept anti-join later reads the pinned
     // tok. Under AQE "lazy" defers only tok's result stage: its spread
     // exchange's map stage still runs as its own job when the checkpoint
-    // is planned (CorpusRecipeSpec pins the count). re-spread after the
-    // checkpoint: an ExistingRDD scan reports
-    // UnknownPartitioning, so the shingle window would otherwise insert
-    // an ENSURE_REQUIREMENTS exchange that AQE coalesces to one
-    // partition, serializing the lead()-window pass (r19)
-    val tok = Spread.byCols(
-      tokenRows(df, textCol, idCol).localCheckpoint(eager = false),
-      Seq(col(idCol)))
+    // is planned (CorpusRecipeSpec pins the count).
+    val tok = tokenRows(df, textCol, idCol).localCheckpoint(eager = false)
     val sh = shingleRowsPos(tok, idCol, k)
       .select(col(idCol), col("pos"), hash60(col("s")).as("h"))
       .localCheckpoint()
@@ -540,23 +529,11 @@ object TextDedup {
       .withColumn("__ng",
         greatest(lit(1), ceil(col("__df") / lit(smallCap.toDouble))).cast("int"))
       .localCheckpoint()
-    // Spread EXPLICITLY on the join keys: the probe/build exchanges'
-    // map-side bytes are index-sized while the join OUTPUT amplifies
-    // O(df²/smallCap) past them, so AQE's coalescing legally collapses
-    // the ENSURE_REQUIREMENTS shuffles to ONE partition and the salted
-    // emission the cells exist to distribute runs serially (measured: a
-    // single-task 9.5 s stage inside e4d, r19). REPARTITION_BY_NUM on
-    // exactly the join keys satisfies the join's clustering, so these
-    // stay the ONLY exchanges — the bucketPairs discipline.
-    val probe = Spread.byCols(
-      sized.select(col(idCol), col(blockCol), col("n"), col("t"),
-        explode(expr("sequence(0, __ng - 1)")).as("__s")),
-      Seq(col("t"), col(blockCol), col("__s")))
-    val build = Spread.byCols(
-      sized.select(col(idCol).as("__bid"), col(blockCol).as("__bb"),
-        col("n").as("__bn"), col("t").as("__bt"),
-        pmod(xxhash64(col(idCol)), col("__ng")).cast("int").as("__s")),
-      Seq(col("__bt"), col("__bb"), col("__s")))
+    val probe = sized.select(col(idCol), col(blockCol), col("n"), col("t"),
+      explode(expr("sequence(0, __ng - 1)")).as("__s"))
+    val build = sized.select(col(idCol).as("__bid"), col(blockCol).as("__bb"),
+      col("n").as("__bn"), col("t").as("__bt"),
+      pmod(xxhash64(col(idCol)), col("__ng")).cast("int").as("__s"))
     probe.as("a").join(build.as("b").hint("shuffle_hash"),
         col("a.t") === col("b.__bt") &&
           col(s"a.$blockCol") === col("b.__bb") &&
@@ -593,20 +570,12 @@ object TextDedup {
       df: DataFrame, textCol: String, idCol: String,
       blockCol: String, tau: Double,
       maxTokenDf: Long = 1L << 16, smallCap: Int = 1024): DataFrame = {
-    val tok = Spread.byCols(df, Seq(col(idCol)))
+    val tok = df.repartition(col(idCol))
       .select(col(idCol), col(blockCol), array_distinct(tokens(col(textCol))).as("ts"))
       .select(col(idCol), col(blockCol), size(col("ts")).as("n"),
         explode(col("ts")).as("t"))
-    // Spread the partial→final pair-count exchange on exactly the groupBy
-    // keys: pair keys are ~unique so map-side combine reduces nothing, the
-    // map output is the full O(df²/smallCap) candidate emission, and AQE's
-    // byte proxy under-sizes the ENSURE_REQUIREMENTS exchange it rides
-    // (r19 "not yet optimized" leftover; the REPARTITION_BY_NUM satisfies
-    // the aggregation's clustering so the exchange count is unchanged)
-    Spread.byCols(
-        saltedIndexMatches(tok, idCol, blockCol, tau, maxTokenDf, smallCap,
-          "graft.jaccard.tokendf"),
-        Seq(col("d1"), col("d2"), col("n1"), col("n2")))
+    saltedIndexMatches(tok, idCol, blockCol, tau, maxTokenDf, smallCap,
+        "graft.jaccard.tokendf")
       .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
       .agg(count(lit(1)).as("i"))
       .withColumn("jac", col("i") * lit(1.0) / (col("n1") + col("n2") - col("i")))
@@ -630,7 +599,7 @@ object TextDedup {
       df: DataFrame, textCol: String, idCol: String,
       blockCol: String, tau: Double,
       maxTokenDf: Long = 1L << 16, smallCap: Int = 1024): DataFrame = {
-    val tok = Spread.byCols(df, Seq(col(idCol)))
+    val tok = df.repartition(col(idCol))
       .select(col(idCol), col(blockCol), array_distinct(tokens(col(textCol))).as("ts"))
     val docTok = tok.select(col(idCol), explode(col("ts")).as("t"))
     val dfreq = docTok.groupBy(col("t")).agg(count(lit(1)).as("df"))
@@ -652,12 +621,8 @@ object TextDedup {
     // Prefix tokens are rare BY CONSTRUCTION on a Zipfian corpus, but the
     // same DF cap + salting guards the degenerate uniform-DF case where
     // every prefix collapses onto the same few tokens.
-    // same partial→final spread as [[jaccardPairs]]: distinct is a groupBy
-    // on all four ~unique columns riding the same AQE-sized exchange
-    val cand = Spread.byCols(
-        saltedIndexMatches(pref, idCol, blockCol, tau, maxTokenDf,
-          smallCap, "graft.jaccard.prefix.tokendf"),
-        Seq(col("d1"), col("d2"), col("n1"), col("n2")))
+    val cand = saltedIndexMatches(pref, idCol, blockCol, tau, maxTokenDf,
+        smallCap, "graft.jaccard.prefix.tokendf")
       .distinct()
     val sets = tok.select(col(idCol), col("ts"))
     cand

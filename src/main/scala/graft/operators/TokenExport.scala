@@ -31,15 +31,7 @@ private[operators] object TokenExport {
       .select(col("word"), col("pos").as("__tpos"), col("col").as("token"))
     import spark.implicits._
     val idDf = ids.toDF("token", "token_id")
-    // Spread EXPLICITLY on the window key: the join output's map bytes
-    // look small, so AQE coalesces the window's ENSURE_REQUIREMENTS
-    // exchange to ONE partition and the per-doc sort + row_number run
-    // serially (measured ~0.43 s single-task stages, r19). The explicit
-    // hash partitioning satisfies the window's clustering, so this stays
-    // the only exchange.
-    Spread.byCols(
-        words.join(perTok, "word").join(broadcast(idDf), "token"),
-        Seq(col(idCol)))
+    words.join(perTok, "word").join(broadcast(idDf), "token")
       .withColumn("pos", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
           .orderBy(col("__wpos"), col("__tpos"))).cast("long") - 1)

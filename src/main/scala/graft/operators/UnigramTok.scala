@@ -105,12 +105,9 @@ object UnigramTok {
     val session = words.sparkSession
     import session.implicits._
     val bc = session.sparkContext.broadcast(pieceTable(pieces))
-    // Spread BEFORE the lattice pass: the input is typically a distinct/
-    // groupBy output whose map-side bytes look tiny, so AQE coalesces it
-    // to ONE partition — but the per-word Viterbi lattice amplifies far
-    // beyond bytes (the Spread scaladoc's exact case; measured ~0.45 s
-    // single-task stages across the tokenizer gate rows, r19).
-    Spread.byCols(words.select(col("word").cast("string")), Seq(col("word")))
+    // spread BEFORE the lattice pass: the per-word Viterbi lattice
+    // amplifies far beyond the input's bytes
+    words.select(col("word").cast("string")).repartition(col("word"))
       .as[String]
       .mapPartitions { it =>
         val t = bc.value
@@ -231,32 +228,14 @@ object UnigramTok {
     * serving path; the corpus never re-tokenizes per EM iteration.
     */
   def expectedCounts(words: DataFrame,
-                     pieces: Seq[(String, Double)]): DataFrame =
-    expectedCountsWith(words,
-      words.sparkSession.sparkContext.broadcast(probTable(pieces)))
-
-  /** [[expectedCounts]] against a CALLER-OWNED broadcast table, so loop
-    * drivers ([[fit]]'s emRound) can destroy the broadcast once their
-    * round's collect completes — one-shot callers accumulate at most one
-    * broadcast per call, but an EM fit broadcasts per round (plus prune
-    * rounds) and would otherwise pin every stale table on driver and
-    * executors for the job's lifetime (ADVICE r17).
-    */
-  private[graft] def expectedCountsWith(
-      words: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[ProbTable],
-      spread: Boolean = true): DataFrame = {
+                     pieces: Seq[(String, Double)]): DataFrame = {
     val session = words.sparkSession
     import session.implicits._
+    val bc = session.sparkContext.broadcast(probTable(pieces))
     // spread before the forward–backward lattice pass — see
     // [[segmentWords]]; the downstream per-piece aggregation is an exact
     // decimal sum, so the result is partitioning-independent by design.
-    // Loop drivers (fit/emIterations/quantizedFit) route through
-    // [[expectedWeighted]] instead — their persisted word table is
-    // already spread, and the fused emit skips the freq re-attach join;
-    // `spread = false` remains for callers in that position.
-    val in = words.select(col("word").cast("string"))
-    (if (spread) Spread.byCols(in, Seq(col("word"))) else in)
+    words.select(col("word").cast("string")).repartition(col("word"))
       .as[String]
       .mapPartitions { it =>
         val t = bc.value
@@ -272,7 +251,7 @@ object UnigramTok {
       .toDF("word", "piece", "e")
   }
 
-  /** [[expectedCountsWith]] FUSED with the freq weighting — the EM loop
+  /** [[expectedCounts]] FUSED with the freq weighting — the EM loop
     * drivers' E-step: one mapPartitions over the persisted `(word, freq)`
     * table emitting `(piece, e·freq)` directly. The unfused form computed
     * expectations from `wf.select("word")` and re-JOINED `wf` on word to
@@ -413,9 +392,8 @@ object UnigramTok {
     // NO spread before the per-word FFBS draw (r19 regression, VERDICT
     // r19 what's-wrong #1): one forward pass + one multinomial draw per
     // word is nowhere near the EM lattice passes' amplification, so the
-    // added REPARTITION_BY_NUM exchange cost more than it bought
-    // (t33 0.89× measured). Large word tables carry large map-side bytes
-    // and AQE sizes the stage correctly without help.
+    // added repartition exchange cost more than it bought
+    // (t33 0.89× measured).
     words.select(col("word").cast("string"))
       .as[String]
       .mapPartitions { it =>
@@ -537,9 +515,8 @@ object UnigramTok {
     // persist ALREADY spread by word: the seed flatMap and every EM/prune
     // round's lattice pass then run at deliberate parallelism off the
     // cached partitions (one shuffle here instead of one per round)
-    val wf = Spread.byCols(
-        words.select(col("word").cast("string"), col("freq").cast("long")),
-        Seq(col("word")))
+    val wf = words.select(col("word").cast("string"), col("freq").cast("long"))
+      .repartition(col("word"))
       .as[(String, Long)].persist()
     try {
       // ---- seed: substring counts, singles unconditionally kept ----
@@ -792,9 +769,8 @@ object UnigramTok {
       s"quantScale $quantScale outside [1,18]")
     val session = words.sparkSession
     import session.implicits._
-    val wf = Spread.byCols(
-        words.select(col("word").cast("string"), col("freq").cast("long")),
-        Seq(col("word")))
+    val wf = words.select(col("word").cast("string"), col("freq").cast("long"))
+      .repartition(col("word"))
       .toDF("word", "freq").persist()
     try {
       var cur = seed.sortBy(_._1).toArray
@@ -882,9 +858,8 @@ object UnigramTok {
       s"quantScale $quantScale outside [1,18]")
     val session = words.sparkSession
     import session.implicits._
-    val wf = Spread.byCols(
-        words.select(col("word").cast("string"), col("freq").cast("long")),
-        Seq(col("word")))
+    val wf = words.select(col("word").cast("string"), col("freq").cast("long"))
+      .repartition(col("word"))
       .toDF("word", "freq").persist()
     try {
       // ---- seed: fit's substring counts, singles unconditionally kept

@@ -552,4 +552,45 @@ class PlanAuditSpec extends SparkSpec {
     // the final sort), never a corpus-grain shuffle cascade
     assert(exchanges(p) <= 3, s"E-step must stay <= 3 exchanges:\n${p.take(400)}")
   }
+
+  /** (shuffle origin, partitions its reader ran on) for every shuffle of an
+    * EXECUTED adaptive plan: the AQE read's partition specs when AQE
+    * rewrote the read, else the exchange's own partition count.
+    */
+  private def shuffleReads(df: org.apache.spark.sql.DataFrame): Seq[(String, Int)] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }).flatMap(walk)
+    val nodes = walk(df.queryExecution.executedPlan)
+    val readBy = nodes.collect {
+      case r: AQEShuffleReadExec if r.child.isInstanceOf[ShuffleQueryStageExec] =>
+        r.child.asInstanceOf[ShuffleQueryStageExec].id -> r.partitionSpecs.size
+    }.toMap
+    nodes.collect { case s: ShuffleQueryStageExec =>
+      val e = s.shuffle.asInstanceOf[ShuffleExchangeExec]
+      e.shuffleOrigin.toString -> readBy.getOrElse(s.id, e.numPartitions)
+    }
+  }
+
+  test("parallelism policy: tiny shuffles keep defaultParallelism partitions under AQE") {
+    // a few KB of map output: at Spark's 1 MB minPartitionSize default AQE
+    // coalesces both shuffles to ONE partition; the session's 1-byte floor
+    // keeps defaultParallelism (4 here) for both origins
+    import spark.implicits._
+    val n = spark.sparkContext.defaultParallelism
+    val keyed = spark.range(0, 20000, 1, n).select(($"id" % 5000).as("k"), $"id")
+    val agg = keyed.groupBy($"k").count()
+    assert(agg.collect().length == 5000)
+    assert(shuffleReads(agg) == Seq("ENSURE_REQUIREMENTS" -> n),
+      agg.queryExecution.executedPlan.toString)
+    val rep = keyed.repartition($"k")
+    assert(rep.collect().length == 20000)
+    assert(shuffleReads(rep) == Seq("REPARTITION_BY_COL" -> n),
+      rep.queryExecution.executedPlan.toString)
+  }
 }

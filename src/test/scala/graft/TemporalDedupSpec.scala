@@ -41,6 +41,17 @@ class TemporalDedupSpec extends SparkSpec {
     assert(seen == Seq(1L))
   }
 
+  test("empty groupCols is rejected: round-robin slices would dedup apart") {
+    // one clip, one key, frames 0.5 s apart: the kept-set keeps every 4th
+    val rows = (0 until 400).map(i => F("v", i * 0.5, "A", i.toLong))
+    assert(engine(rows) == oracle(rows))
+    assert(oracle(rows).size == 100)
+    val e = intercept[IllegalArgumentException] {
+      TemporalDedup.dedup(rows.toDF("g", "t", "k", "id"), Nil, "t", "k", 2.0, 24)
+    }
+    assert(e.getMessage.contains("groupCols"))
+  }
+
   test("duplicate just outside the 2s window is kept") {
     val rows = Seq(F("v", 0.0, "A", 1), F("v", 2.0, "A", 2))
     assert(engine(rows) == Seq(1L, 2L))
