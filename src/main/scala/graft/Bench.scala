@@ -31,50 +31,6 @@ object Bench {
     s"""{"error":${graft.serving.HttpServing.jsonValue(
       s"${t.getClass.getName}: ${t.getMessage}")}}"""
 
-  private def percentile(xs: Seq[Double], p: Double): Double = {
-    val s = xs.sorted
-    s(math.round(p * (s.size - 1)).toInt)
-  }
-
-  /** Serving-latency sidecar (r9 advice #3): searcher.js is a PER-REQUEST
-    * server (top-15, nprobe 10) but the bench times batch scans only —
-    * this measures N single-query requests through [[graft.serving
-    * .SearchService]] per serving mode, POST-load (the Milvus measurement
-    * shape: the index build is the collection load, paid once; the number
-    * that matters is the per-probe latency). p50/p95 land in
-    * `bench_detail.json` only — the driver's stdout-line contract is
-    * untouched. At gate SF the table is small, so these numbers expose the
-    * per-request JOB FLOOR (scheduling + collect) more than codec
-    * throughput; ServingLatencySpec pins the codec ordering on a table
-    * sized past the floor.
-    */
-  private def servingLatency(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = try {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.clusteredEmbeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val queries = emb.orderBy(col("vec_id")).limit(25).collect()
-      .map(_.getSeq[Float](1).toArray)
-    def measure(mode: String): (Double, Double, Double) = {
-      val t0 = System.nanoTime()
-      val svc = new graft.serving.SearchService(
-        emb, "embedding", "vec_id", mode = mode, nlist = 32, nprobe = 4)
-      val load = (System.nanoTime() - t0) / 1e9
-      queries.take(5).foreach(svc.searchVector) // warm the serving plan
-      val times = queries.toIndexedSeq.map { q =>
-        val s = System.nanoTime()
-        svc.searchVector(q)
-        (System.nanoTime() - s) / 1e6
-      }
-      (percentile(times, 0.50), percentile(times, 0.95), load)
-    }
-    def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
-    Seq("exact", "ivf_sq8", "ivf_pq").map { m =>
-      val (p50, p95, load) = measure(m)
-      s""""$m":{"p50_ms":${f1(p50)},"p95_ms":${f1(p95)},"load_s":${f1(load)},"n":${queries.length}}"""
-    }.mkString("{", ",", "}")
-  } catch { case t: Throwable => sidecarError(t) }
-
   /** nprobe recall/latency curve sidecar (VERDICT r11 #3): JSON per codec,
     * points from [[AnnRecall.nprobeCurve]] on the clustered fixture —
     * recall@15 + warmed probe wall at nprobe ∈ {1,2,4,8,16}. Lands in
@@ -90,228 +46,6 @@ object Bench {
           .mkString("[", ",", "]")
         s""""$codec":$arr"""
       }.mkString("{", ",", "}")
-  } catch { case t: Throwable => sidecarError(t) }
-
-  /** Sustained serving THROUGHPUT through the full HTTP e2e path (VERDICT
-    * r11 #6): the reference rate-limits at 100 req/s/IP
-    * (`searcher.js:125-129`) — this measures what the engine can actually
-    * sustain. Per codec: a SearchService with the rate limiter opened up,
-    * `nThreads` concurrent clients each POSTing raw JPEG bytes to /search
-    * (the real wire path: HTTP → decode → descriptor → probe → JSON
-    * envelope), reporting req/s over the full burst and the p95
-    * per-request latency. bench_detail only.
-    */
-  /** One blocking POST; drains the response, returns the status. Shared
-    * by the serving_rps and hybrid_rps sidecars (self-review r16 #5).
-    * java.net.http.HttpClient, not HttpURLConnection: the legacy client
-    * writes headers and body as two small packets, and Nagle holds the
-    * second behind the peer's delayed ACK — a ~40 ms per-request stall
-    * that pinned every measured endpoint at clients/0.05 req/s (r19; the
-    * server side's TCP_NODELAY is set in HttpServing for the same
-    * reason). A measurement client must not BE the bottleneck.
-    */
-  private val httpClient = java.net.http.HttpClient.newBuilder()
-    .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
-  private def httpPost(port: Int, path: String, body: Array[Byte]): Int = {
-    val req = java.net.http.HttpRequest
-      .newBuilder(java.net.URI.create(s"http://127.0.0.1:$port$path"))
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofByteArray(body))
-      .build()
-    httpClient.send(req,
-      java.net.http.HttpResponse.BodyHandlers.discarding()).statusCode()
-  }
-
-  private[graft] def servingRps(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = try {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.clusteredEmbeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    def jpeg(i: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        64, 64, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g2 = img.createGraphics()
-      g2.setColor(new java.awt.Color(i * 53 % 256, i * 91 % 256, i * 131 % 256))
-      g2.fillRect(0, 0, 64, 64)
-      g2.setColor(java.awt.Color.WHITE)
-      (0 until 8).foreach { j =>
-        if (((i >> j) & 1) == 1) g2.fillRect(j * 8, 0, 8, 8)
-      }
-      g2.dispose()
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", baos)
-      baos.toByteArray
-    }
-    val images = (0 until 32).map(jpeg)
-    val nThreads = 8
-    // r19: the de-Nagled endpoints answer in single-digit ms — a longer
-    // burst keeps the measured window meaningful
-    val perThread = 50
-    def post(port: Int, body: Array[Byte]): Int = httpPost(port, "/search", body)
-    def measure(mode: String): (Double, Double, Int) = {
-      val svc = new graft.serving.SearchService(
-        emb, "embedding", "vec_id", mode = mode, nlist = 32, nprobe = 4,
-        maxReqPerSec = Int.MaxValue) // measure capacity, not the limiter
-      val port = svc.start(0)
-      try {
-        images.take(8).foreach(b => post(port, b)) // warm plan + HTTP path
-        val lat = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-        val errs = new java.util.concurrent.atomic.AtomicInteger(0)
-        val t0 = System.nanoTime()
-        val threads = (0 until nThreads).map { t =>
-          new Thread(() => {
-            var i = 0
-            while (i < perThread) {
-              val s = System.nanoTime()
-              val code = post(port, images((t * perThread + i) % images.size))
-              if (code != 200) errs.incrementAndGet()
-              lat.add((System.nanoTime() - s) / 1e6)
-              i += 1
-            }
-          })
-        }
-        threads.foreach(_.start())
-        threads.foreach(_.join())
-        val wall = (System.nanoTime() - t0) / 1e9
-        val times = {
-          import scala.jdk.CollectionConverters._
-          lat.asScala.map(_.doubleValue).toIndexedSeq
-        }
-        (nThreads * perThread / wall, percentile(times, 0.95), errs.get())
-      } finally svc.stop()
-    }
-    def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
-    Seq("exact", "ivf_sq8", "ivf_pq").map { m =>
-      val (rps, p95, errs) = measure(m)
-      s""""$m":{"rps":${f1(rps)},"p95_ms":${f1(p95)},"clients":$nThreads,"n":${nThreads * perThread},"errors":$errs}"""
-    }.mkString("{", ",", "}")
-  } catch { case t: Throwable => sidecarError(t) }
-
-  /** Append-serve sidecar (VERDICT r18 #1 — the reference's loader
-    * inserts while the searcher serves): sustained vector-endpoint
-    * throughput WHILE a maintenance thread appends new rows into the
-    * served index and atomically refreshes ([[graft.serving.SearchService
-    * .appendAndRefresh]]). Reports req/s and p95 over the maintenance
-    * window, the number of refreshes completed, and errors (must be 0 —
-    * every request answers from either the old or the new snapshot).
-    * bench_detail only.
-    */
-  private[graft] def refreshRps(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = try {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.clusteredEmbeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val queries = emb.orderBy(col("vec_id")).limit(25).collect()
-      .map(_.getSeq[Float](1).toArray)
-    // append payload: existing vectors under fresh ids (the assignment +
-    // encode cost is what matters, not the values)
-    val payload = emb.orderBy(col("vec_id")).limit(200).collect()
-      .map(_.getSeq[Float](1).toArray)
-    val dir = graft.sources.TempDirs.register(
-      s"/tmp/graft_bench_refresh_${ProcessHandle.current().pid()}")
-    val svc = new graft.serving.SearchService(
-      emb, "embedding", "vec_id", mode = "ivf_sq8", nlist = 32, nprobe = 4,
-      maxReqPerSec = Int.MaxValue, indexDir = Some(dir))
-    try {
-      queries.take(5).foreach(svc.searchVector) // warm
-      val stopAt = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val lat = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-      val errs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val nThreads = 8
-      val t0 = System.nanoTime()
-      val searchers = (0 until nThreads).map { t =>
-        new Thread(() => {
-          var i = 0
-          while (!stopAt.get()) {
-            val s = System.nanoTime()
-            try {
-              if (svc.searchVector(queries((t * 31 + i) % queries.length)).isEmpty)
-                errs.incrementAndGet()
-            } catch { case _: Throwable => errs.incrementAndGet() }
-            lat.add((System.nanoTime() - s) / 1e6)
-            i += 1
-          }
-        })
-      }
-      searchers.foreach(_.start())
-      val refreshes = 4
-      val maxId = 10000000L // past any fixture vec_id: appended ids are new
-      (0 until refreshes).foreach { b =>
-        import spark.implicits._
-        svc.appendAndRefresh(
-          payload.zipWithIndex.map { case (v, i) => (maxId + b * 1000 + i, v) }
-            .toSeq.toDF("vec_id", "embedding"))
-      }
-      stopAt.set(true)
-      searchers.foreach(_.join(30000))
-      val wall = (System.nanoTime() - t0) / 1e9
-      val times = {
-        import scala.jdk.CollectionConverters._
-        lat.asScala.map(_.doubleValue).toIndexedSeq
-      }
-      def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
-      s"""{"rps":${f1(times.size / wall)},"p95_ms":${f1(percentile(times, 0.95))},"clients":$nThreads,"n":${times.size},"refreshes":$refreshes,"appended_rows":${refreshes * payload.length},"errors":${errs.get()}}"""
-    } finally svc.stop()
-  } catch { case t: Throwable => sidecarError(t) }
-
-  /** Hybrid TEXT retrieval throughput ([[graft.serving
-    * .HybridSearchService]]): concurrent clients POSTing query strings to
-    * /hybrid — per request a pushed-In(term) BM25 probe of the persisted
-    * store + a cached-index cosine probe + RRF, the r4 pipeline on the
-    * wire. Smaller burst than the vector path (each request is two Spark
-    * jobs plus fusion); bench_detail only.
-    */
-  private[graft] def hybridRps(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = try {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = docs.where(col("doc_id") >= 3)
-      .select(col("doc_id"), col("text"))
-    val queryTexts = docs.where(col("doc_id") < 8)
-      .select(col("text")).collect().map(_.getString(0))
-    val dir = graft.sources.TempDirs.register(
-      s"/tmp/graft_bench_hybrid_${ProcessHandle.current().pid()}")
-    graft.operators.Bm25.save(
-      graft.operators.Bm25.fit(corpus, "doc_id", "text"), dir)
-    val svc = new graft.serving.HybridSearchService(
-      corpus, "doc_id", "text", dir, k = 10, fetchK = 20,
-      maxReqPerSec = Int.MaxValue) // measure capacity, not the limiter
-    val port = svc.start(0)
-    try {
-      def post(body: Array[Byte]): Int = httpPost(port, "/hybrid", body)
-      val bodies = queryTexts.map(_.getBytes("UTF-8"))
-      // warm every distinct body once: the first touch of a term pays the
-      // postings fetch (one pushed-In(term) probe); steady-state serving
-      // is the cache-hit regime the driver-resident tier is designed for,
-      // so the measured window is all-warm — the cold path is what the
-      // warmup itself (and LocalHybridSpec) exercises
-      bodies.foreach(post)
-      val nThreads = 4
-      val perThread = 50 // r19: sub-20ms requests need a longer burst
-      val lat = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-      val errs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val t0 = System.nanoTime()
-      val threads = (0 until nThreads).map { t =>
-        new Thread(() => {
-          var i = 0
-          while (i < perThread) {
-            val s = System.nanoTime()
-            if (post(bodies((t * perThread + i) % bodies.length)) != 200)
-              errs.incrementAndGet()
-            lat.add((System.nanoTime() - s) / 1e6)
-            i += 1
-          }
-        })
-      }
-      threads.foreach(_.start())
-      threads.foreach(_.join())
-      val wall = (System.nanoTime() - t0) / 1e9
-      val times = {
-        import scala.jdk.CollectionConverters._
-        lat.asScala.map(_.doubleValue).toIndexedSeq
-      }
-      def f1(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)
-      s"""{"rps":${f1(nThreads * perThread / wall)},"p95_ms":${f1(percentile(times, 0.95))},"clients":$nThreads,"n":${nThreads * perThread},"errors":${errs.get()}}"""
-    } finally svc.stop()
   } catch { case t: Throwable => sidecarError(t) }
 
   /** Ingest throughput against BASELINE.md's derived target ("≥ 12
@@ -615,8 +349,8 @@ object Bench {
     }
     // Full precision to a file (the driver's stdout capture keeps only the
     // LAST ~2000 chars; rounds 7 and 8 lost the JSON line to that buffer),
-    // plus the serving-latency sidecar (detail-file only — the stdout-line
-    // contract is untouched).
+    // plus the sidecars (detail-file only — the stdout-line contract is
+    // untouched).
     try {
       val gcJson = withGc.map { case (k, (_, g, _)) => s""""$k":$g""" }
         .mkString("{", ",", "}")
@@ -635,7 +369,7 @@ object Bench {
           s""","scaling":${new String(bytes, "UTF-8").trim}"""
         } else ""
       } catch { case _: Throwable => "" }
-      // Sidecars run ~4–5 min of wall outside the judged per-query total;
+      // Sidecars add wall time outside the judged per-query total;
       // SPARK_GRAFT_SIDECARS=0 skips them for local verify cycles (every
       // key stays present and parse-valid, marked skipped). A skipped run
       // says so on stderr and in a top-level "sidecars_skipped" flag, so
@@ -650,10 +384,6 @@ object Bench {
         (if (sidecarsOn) "" else ""","sidecars_skipped":true""") +
         s""","bands_n":${bands.size},"band_outliers":${bandOutliers.mkString("{", ",", "}")}""" +
         s""","gc_ms":$gcJson""" +
-        s""","serving_ms":${sidecar(servingLatency(spark, sfDir))}""" +
-        s""","serving_rps":${sidecar(servingRps(spark, sfDir))}""" +
-        s""","refresh_rps":${sidecar(refreshRps(spark, sfDir))}""" +
-        s""","hybrid_rps":${sidecar(hybridRps(spark, sfDir))}""" +
         s""","nprobe_curve":${sidecar(nprobeCurve(spark, sfDir))}""" +
         scaling +
         s""","bpe_apply":${sidecar(bpeApply(spark))}""" +

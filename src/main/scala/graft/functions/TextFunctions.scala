@@ -92,13 +92,6 @@ object TextFunctions {
 
   private val Mask60 = (1L << 60) - 1
 
-  /** Seeded variant for MinHash hash families: h_j(x) = hash60(j || '|' || x).
-    * One md5 PER SEED — prefer [[hashPair]] + [[kmHash]] (one md5 total) for
-    * k-family sketches.
-    */
-  def hash60Seeded(c: Column, seed: Int): Column =
-    hash60(concat_ws("|", lit(seed), c))
-
   /** Two independent hashes from ONE md5: h1 = bits of hex[1..15] (60-bit),
     * h2 = bits of hex[17..30] (56-bit — kept under 57 bits so
     * `h1 + 7 * h2` cannot overflow a signed long, ANSI-safely).

@@ -68,12 +68,6 @@ object VectorFunctions {
   def l2NormalizeWith(v: Column, norm: Column): Column =
     transform(v, x => x.cast("double") / norm)
 
-  /** Cosine similarity of two vectors (IP over L2-normalized inputs — the
-    * reference's effective metric, SURVEY §1.3).
-    */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Parse the reference's hash string — ~dim space-separated hex codes ≤3
     * digits (`loader.js:99-117`) — into a fixed-length double vector,
     * zero-padded to `dim` (`loader.js:113-116`).

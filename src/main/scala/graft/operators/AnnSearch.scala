@@ -20,28 +20,13 @@ import org.apache.spark.sql.functions._
   */
 object AnnSearch {
 
-  /** Exact top-k by inner product against a literal query vector.
-    * Deterministic: ties broken by `idCol`.
-    */
-  /** The native fast_dot expression needs GraftExtensions in the session;
-    * fall back to the (bit-identical) composed fold when serving a foreign
-    * session — e.g. the driver's own smoke-check session.
-    */
-  private def bestDot(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("fast_dot")) fastDot(a, b)
-    else dot(a, b)
-
-  private def bestL2Sq(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("fast_l2sq")) fastL2Sq(a, b)
-    else l2Sq(a, b)
-
   /** The exact per-row score of `vecCol` against a literal query under
     * `metric` — shared by the exact scan and the quantized paths' re-rank
     * phase ([[graft.serving.SearchService]]).
     */
   def exactScore(df: DataFrame, vecCol: String, query: Seq[Double],
                  metric: VectorMetric): Column = metric match {
-    case VectorMetric.Ip => bestDot(df)(col(vecCol), typedlit(query))
+    case VectorMetric.Ip => fastDot(col(vecCol), typedlit(query))
     case VectorMetric.Cosine =>
       // zero-norm guard (the ingest keeps all-zero hash vectors as zero —
       // IngestPipeline's vectorize fix): cosine with a zero side is
@@ -51,10 +36,10 @@ object AnnSearch {
       else {
         val n = l2Norm(col(vecCol))
         when(n > 0,
-          bestDot(df)(col(vecCol), typedlit(query)) / (n * lit(qn)))
+          fastDot(col(vecCol), typedlit(query)) / (n * lit(qn)))
           .otherwise(lit(0.0))
       }
-    case VectorMetric.L2 => bestL2Sq(df)(col(vecCol), typedlit(query))
+    case VectorMetric.L2 => fastL2Sq(col(vecCol), typedlit(query))
   }
 
   /** `ORDER BY score [DESC|ASC], id LIMIT k` under the metric's better-is
@@ -111,7 +96,7 @@ object AnnSearch {
     // prunes both scans to exactly the columns the search reads.
     val b = base.select(col(idCol).as("__bid"), col(vecCol).as("__bvec"))
     val q = queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qvec"))
-    heapTopK(b.crossJoin(broadcast(q)), base, metric, k, qidCol, idCol)
+    heapTopK(b.crossJoin(broadcast(q)), metric, k, qidCol, idCol)
   }
 
   /** The batched searches' output carries the query id, the literal
@@ -127,18 +112,17 @@ object AnnSearch {
   }
 
   /** Score the (`__bvec`, `__qvec`) pair under `metric` — exactScore's
-    * conventions (cosine zero-guards both sides to 0). `fnSrc` only picks
-    * the session for the native-vs-composed dot check.
+    * conventions (cosine zero-guards both sides to 0).
     */
-  private def pairScore(fnSrc: DataFrame, metric: VectorMetric): Column =
+  private def pairScore(metric: VectorMetric): Column =
     metric match {
-      case VectorMetric.Ip => bestDot(fnSrc)(col("__bvec"), col("__qvec"))
-      case VectorMetric.L2 => bestL2Sq(fnSrc)(col("__bvec"), col("__qvec"))
+      case VectorMetric.Ip => fastDot(col("__bvec"), col("__qvec"))
+      case VectorMetric.L2 => fastL2Sq(col("__bvec"), col("__qvec"))
       case VectorMetric.Cosine =>
         val bn = l2Norm(col("__bvec"))
         val qn = l2Norm(col("__qvec"))
         when(bn > 0 && qn > 0,
-          bestDot(fnSrc)(col("__bvec"), col("__qvec")) / (bn * qn))
+          fastDot(col("__bvec"), col("__qvec")) / (bn * qn))
           .otherwise(lit(0.0))
     }
 
@@ -146,10 +130,10 @@ object AnnSearch {
     * (`__qid`, `__bid`, `__bvec`, `__qvec`) row, fold per-partition
     * per-query O(k) heaps, explode to (qidCol, rank, idCol).
     */
-  private def heapTopK(cands: DataFrame, fnSrc: DataFrame,
+  private def heapTopK(cands: DataFrame,
                        metric: VectorMetric, k: Int,
                        qidCol: String, idCol: String): DataFrame = {
-    val score = pairScore(fnSrc, metric)
+    val score = pairScore(metric)
     // topk_ids keeps the HIGHEST ord: negate for ascending-better metrics
     // (-score DESC ≡ score ASC, id tie-break unchanged)
     val ord = if (metric.descending) score else -score
@@ -219,12 +203,12 @@ object AnnSearch {
     // nprobe cut and silently break the documented IvfIndex.search parity
     // (r13 self-review #1)
     def rankScore(c: Array[Double]): Column = metric match {
-      case VectorMetric.Ip => bestDot(queries)(col("__qvec"), typedlit(c.toIndexedSeq))
+      case VectorMetric.Ip => fastDot(col("__qvec"), typedlit(c.toIndexedSeq))
       case VectorMetric.Cosine =>
-        bestDot(queries)(col("__qvec"), typedlit(c.toIndexedSeq)) /
+        fastDot(col("__qvec"), typedlit(c.toIndexedSeq)) /
           lit(math.max(math.sqrt(c.map(x => x * x).sum), 1e-300))
       case VectorMetric.L2 =>
-        bestL2Sq(queries)(col("__qvec"), typedlit(c.toIndexedSeq))
+        fastL2Sq(col("__qvec"), typedlit(c.toIndexedSeq))
     }
     // ascending array_sort over (±score, index) = better-first with the
     // stable index tie-break rankCentroids' sortBy gives
@@ -252,7 +236,7 @@ object AnnSearch {
     // equi-join, probe side broadcast: each base row meets only the
     // queries that probed its cluster
     heapTopK(b.join(broadcast(probes), col("__bc") === col("__pc")),
-      indexed, metric, k, qidCol, idCol)
+      metric, k, qidCol, idCol)
   }
 }
 
@@ -345,26 +329,21 @@ object IvfIndex {
       df: DataFrame,
       vecCol: String,
       model: Model,
-      outCol: String = "cluster_id"): DataFrame =
-    if (df.sparkSession.catalog.functionExists("centroid_argmin")) {
-      // broadcast-shipped centroid table (graft.functions.CentroidArgminBc,
-      // bit-identical to the literal form below): the plan carries a
-      // content-keyed handle, never O(nlist·dim) literals — at a production
-      // coarse quantizer (nlist 4k–64k) the literal form is megabytes of
-      // plan riding every task, the e9b G1-storm shape (VERDICT r18 #1)
-      val key = graft.functions.CentroidBroadcasts.register(
-        df.sparkSession, model.centroids)
-      df.withColumn(outCol,
-        call_function("centroid_argmin", lit(key), col(vecCol)))
-    } else {
-      // extension-free fallback: the composed literal form (assignLiteral
-      // is also the parity reference IvfSpec pins the broadcast form to)
-      assignLiteral(df, vecCol, model, outCol)
-    }
+      outCol: String = "cluster_id"): DataFrame = {
+    // broadcast-shipped centroid table (graft.functions.CentroidArgminBc,
+    // bit-identical to assignLiteral): the plan carries a content-keyed
+    // handle, never O(nlist·dim) literals — at a production coarse
+    // quantizer (nlist 4k–64k) the literal form is megabytes of plan
+    // riding every task, the e9b G1-storm shape (VERDICT r18 #1)
+    val key = graft.functions.CentroidBroadcasts.register(
+      df.sparkSession, model.centroids)
+    df.withColumn(outCol,
+      call_function("centroid_argmin", lit(key), col(vecCol)))
+  }
 
   /** The r18 composed-literal assignment — O(nlist·dim) literals in the
-    * plan. Kept as the extension-free fallback and as the bit-parity
-    * reference for [[graft.functions.CentroidArgminBc]]; production paths
+    * plan. Kept as the bit-parity reference for
+    * [[graft.functions.CentroidArgminBc]] (IvfSpec); production paths
     * route through [[assign]].
     */
   private[graft] def assignLiteral(
@@ -372,13 +351,9 @@ object IvfIndex {
       vecCol: String,
       model: Model,
       outCol: String = "cluster_id"): DataFrame = {
-    val dotFn: (Column, Column) => Column =
-      if (df.sparkSession.catalog.functionExists("fast_dot"))
-        graft.functions.VectorFunctions.fastDot
-      else graft.functions.VectorFunctions.dot
     val dists = model.centroids.map { c =>
       lit(c.map(x => x * x).sum) -
-        lit(2.0) * dotFn(col(vecCol), typedlit(c.toIndexedSeq))
+        lit(2.0) * fastDot(col(vecCol), typedlit(c.toIndexedSeq))
     }
     val arr = array(dists.toIndexedSeq: _*)
     df.withColumn(outCol, (array_position(arr, array_min(arr)) - 1).cast("int"))

@@ -169,6 +169,11 @@ object ConnectedComponents {
       labels = next.select("id", "lbl")
       i += 1
     }
+    // unconverged labels split components: fail rather than mis-cluster
+    if (!done) throw new IllegalStateException(
+      s"ConnectedComponents.minLabel did not converge in $maxIter rounds " +
+        "(graph diameter too large): use alternatingStar, whose rounds are " +
+        "O(log n) on any topology, or a larger maxIter")
     labels.select(col("id").as(idName), col("lbl").as("cluster"))
   }
 
@@ -231,11 +236,16 @@ object ConnectedComponents {
     var sig = signature(edges)
     var done = edges.isEmpty
     var i = 0
-    while (!done && i < maxIter) {
+    while (!done) {
       // Star rounds preserve connectivity while strictly shrinking toward a
       // star per component, so the moment the surviving edge set is small
       // enough, union-find on the driver finishes the job exactly.
       if (sig._1 <= localThreshold) return finishLocal(vertices, idName, edges)
+      // a non-star edge set maps vertices to non-minimal roots, some to
+      // several: fail rather than mis-cluster
+      if (i == maxIter) throw new IllegalStateException(
+        s"ConnectedComponents.alternatingStar did not converge in $maxIter " +
+          "rounds: use a larger maxIter")
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nsig = signature(next)
       done = nsig == sig

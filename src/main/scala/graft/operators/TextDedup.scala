@@ -706,9 +706,7 @@ object TextDedup {
         col(s"a.$blockCol") === col(s"b.$blockCol") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("v1"), col(s"b.$idCol").as("v2"),
-        ((if (df.sparkSession.catalog.functionExists("fast_dot"))
-            fastDot(col(s"a.$vecCol"), col(s"b.$vecCol"))
-          else dot(col(s"a.$vecCol"), col(s"b.$vecCol"))) /
+        (fastDot(col(s"a.$vecCol"), col(s"b.$vecCol")) /
           (col("a.nn") * col("b.nn"))).as("c"))
       .where(col("c") > tau)
       .select(col("v1"), col("v2"), round(col("c"), 6).as("cos"))
@@ -735,14 +733,10 @@ object TextDedup {
       bands: Int = 8, bits: Int = 12, seed: Long = 42L,
       smallCap: Int = 1024, maxBucket: Long = 1L << 16): DataFrame = {
     val rnd = new scala.util.Random(seed)
-    def dotC(v: Column, plane: Array[Float]): Column =
-      if (df.sparkSession.catalog.functionExists("fast_dot"))
-        fastDot(v, typedLit(plane))
-      else dot(v, typedLit(plane))
     val sigs = array((0 until bands).map { b =>
       val sig = (0 until bits).map { i =>
         val plane = Array.fill(dim)(rnd.nextGaussian().toFloat)
-        when(dotC(col(vecCol), plane) > 0, lit(1L << i)).otherwise(lit(0L))
+        when(fastDot(col(vecCol), typedLit(plane)) > 0, lit(1L << i)).otherwise(lit(0L))
       }.reduce(_ + _)
       struct(lit(b).as("band"), sig.as("sig"))
     }: _*)
@@ -755,9 +749,7 @@ object TextDedup {
         struct(col(idCol).as("id"), col(vecCol).as("v"), col("nn").as("nn")).as("__m"))
     bucketPairs(buckets, smallCap, maxBucket, "graft.lsh.srp")
       .select(col("p1.id").as("v1"), col("p2.id").as("v2"),
-        ((if (df.sparkSession.catalog.functionExists("fast_dot"))
-            fastDot(col("p1.v"), col("p2.v"))
-          else dot(col("p1.v"), col("p2.v"))) /
+        (fastDot(col("p1.v"), col("p2.v")) /
           (col("p1.nn") * col("p2.nn"))).as("c"))
       .where(col("c") > tau)
       .select(col("v1"), col("v2"), round(col("c"), 6).as("cos"))

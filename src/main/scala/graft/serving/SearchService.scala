@@ -127,6 +127,11 @@ class SearchService(
   require(rerank == 0 || (rerank > topK && Seq("ivf_sq8", "ivf_pq").contains(mode)),
     s"rerank=$rerank: must be 0 (off) or > topK=$topK with a lossy-codec mode " +
       "(ivf_sq8/ivf_pq; exact and ivf already serve exact scores)")
+  // exact mode serves the cached table itself: there is no index to lay
+  // out, load or refresh, so these settings would be dropped unread
+  require(mode != "exact" || (indexDir.isEmpty && deltaDir.isEmpty && modelDir.isEmpty),
+    "indexDir, deltaDir and modelDir need a quantized mode (ivf, ivf_sq8, " +
+      "ivf_pq); mode 'exact' serves the cached table")
   private val vecMetric: VectorMetric = VectorMetric(metric)
 
   // Query-side descriptor — MUST match the one the table was ingested with
@@ -247,7 +252,9 @@ class SearchService(
     * visibility point. Cheap: a file re-listing, no index rebuild; the
     * per-request nprobe filter partition-prunes base and delta scans alike.
     */
-  def refresh(): Unit = for ((_, model) <- ivf) {
+  def refresh(): Unit = {
+    val model = ivf.getOrElse(throw new IllegalStateException(
+      "refresh() needs a quantized mode (ivf, ivf_sq8, ivf_pq)"))._2
     val dir = indexDir.getOrElse(throw new IllegalStateException(
       "refresh() needs indexDir (the in-memory load is immutable)"))
     val spark = cached.sparkSession
@@ -507,10 +514,9 @@ class SearchService(
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // JDK HttpServer's default (null) executor dispatches ALL requests on
     // one thread — concurrent clients would serialize behind each other's
-    // Spark probe and measured throughput would never exceed 1/latency
-    // (found by the r12 serving_rps sidecar). A fixed pool lets concurrent
-    // probes run as concurrent Spark jobs; 16 is comfortably past the
-    // reference's 100 req/s/IP admission cap.
+    // Spark probe and measured throughput would never exceed 1/latency.
+    // A fixed pool lets concurrent probes run as concurrent Spark jobs; 16
+    // is comfortably past the reference's 100 req/s/IP admission cap.
     pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     server.setExecutor(pool)
     HttpServing.guardedPost(server, "/search", maxBodyBytes, bucket, bytes =>

@@ -93,4 +93,48 @@ class ConnectedComponentsSpec extends SparkSpec {
       localThreshold = 40)
     assert(asMap(got) == (0L until n).map(_ -> 0L).toMap)
   }
+
+  test("minLabel: running out of rounds throws instead of returning split clusters") {
+    // a 30-node chain needs ~30 propagation rounds; 5 leave it unconverged
+    val n = 30L
+    val verts = (0L until n).toDF("doc_id")
+    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("d1", "d2")
+    val e = intercept[IllegalStateException](ConnectedComponents.minLabel(
+      verts, pairs, "d1", "d2", maxIter = 5, localThreshold = 0))
+    assert(e.getMessage.contains("5 rounds") && e.getMessage.contains("alternatingStar"))
+  }
+
+  test("alternatingStar: running out of rounds throws instead of returning a non-star") {
+    val n = 64L
+    val verts = (0L until n).toDF("doc_id")
+    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("d1", "d2")
+    val e = intercept[IllegalStateException](ConnectedComponents.alternatingStar(
+      verts, pairs, "d1", "d2", maxIter = 2, localThreshold = 0))
+    assert(e.getMessage.contains("2 rounds"))
+  }
+
+  test("local-finish edge: threshold = edge count finishes on the driver, one less runs rounds, same clusters") {
+    // 11 pair rows: a 6-link chain, a 2-link chain, a reversed duplicate, a
+    // plain duplicate and a self-loop — 8 canonical (src > dst) edges
+    val verts = (0L until 12L).toDF("doc_id")
+    val rows = (0L until 6L).map(i => (i, i + 1)) ++
+      Seq((8L, 9L), (9L, 10L), (2L, 1L), (8L, 9L), (4L, 4L))
+    val pairs = rows.toDF("d1", "d2")
+    val m = rows.size.toLong
+    val canonical = 8L
+    val expect = (0L to 6L).map(_ -> 0L).toMap ++ Map(7L -> 7L, 11L -> 11L) ++
+      (8L to 10L).map(_ -> 8L)
+    val sc = spark.sparkContext
+    def both(run: Long => org.apache.spark.sql.DataFrame, edge: Long) = {
+      val (local, localJobs) = org.apache.spark.JobCounter(sc)(asMap(run(edge)))
+      val (dist, distJobs) = org.apache.spark.JobCounter(sc)(asMap(run(edge - 1)))
+      assert(local == expect && dist == expect)
+      // the distributed side runs its rounds as jobs; the driver finish none
+      assert(distJobs > localJobs, s"distributed $distJobs jobs vs local $localJobs")
+    }
+    both(t => ConnectedComponents.minLabel(verts, pairs, "d1", "d2",
+      localThreshold = t), m)
+    both(t => ConnectedComponents.alternatingStar(verts, pairs, "d1", "d2",
+      localThreshold = t), canonical)
+  }
 }

@@ -624,4 +624,27 @@ class SearchServiceSpec extends SparkSpec {
       assert(ids(loaded) == ids(fit), s"mode=$mode diverged")
     }
   }
+
+  test("exact mode rejects indexDir, deltaDir and modelDir at construction, before caching") {
+    // exact mode serves the cached table: each setting would be dropped unread
+    val dir = Some("/tmp/graft_exact_unused")
+    Seq[(String, org.apache.spark.sql.DataFrame => SearchService)](
+      "indexDir" -> (t => new SearchService(t, "vec", "id", mode = "exact", indexDir = dir)),
+      "deltaDir" -> (t => new SearchService(t, "vec", "id", mode = "exact", deltaDir = dir)),
+      "modelDir" -> (t => new SearchService(t, "vec", "id", mode = "exact", modelDir = dir))
+    ).foreach { case (setting, build) =>
+      val table = clusteredVectors()
+      val e = intercept[IllegalArgumentException](build(table))
+      assert(e.getMessage.contains(setting))
+      assert(table.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    }
+  }
+
+  test("exact mode: refresh() throws instead of a silent no-op") {
+    val svc = new SearchService(clusteredVectors(), "vec", "id", mode = "exact")
+    try {
+      val e = intercept[IllegalStateException](svc.refresh())
+      assert(e.getMessage.contains("quantized mode"))
+    } finally svc.stop()
+  }
 }
