@@ -2,7 +2,7 @@ package graft.api
 
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
-import graft.operators.{LineDedup, QualityClassifier, Sampling, SequencePack, TextDedup}
+import graft.operators.{ConnectedComponents, LineDedup, QualityClassifier, Sampling, SequencePack, TextDedup}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -21,13 +21,14 @@ import org.apache.spark.sql.functions._
   * stages through this API, so the DuckDB oracle checks the builder
   * end-to-end every round.
   *
-  * Laziness contract: every step except [[tokenBudget]] and
-  * [[scrubSharedPassages]] only composes the plan. `tokenBudget`
-  * delegates to [[Sampling.tokenBudget]], which runs its pass-1 job
-  * eagerly and rebuilds the frame behind an analysis barrier — gate and
-  * project BEFORE budgeting (the step order the builder's API makes
-  * natural). `scrubSharedPassages` checkpoints its shared subtrees, which
-  * runs jobs at composition (see the step's note).
+  * Laziness contract: every step except [[tokenBudget]],
+  * [[scrubSharedPassages]] and [[nearDedup]] only composes the plan.
+  * `tokenBudget` delegates to [[Sampling.tokenBudget]], which runs its
+  * pass-1 job eagerly and rebuilds the frame behind an analysis barrier —
+  * gate and project BEFORE budgeting (the step order the builder's API
+  * makes natural). `scrubSharedPassages` checkpoints its shared subtrees
+  * and `nearDedup` collects its candidate pairs, which runs jobs at
+  * composition (see each step's note).
   */
 final class CorpusRecipe private (
     val frame: DataFrame, idCol: String, textCol: String) {
@@ -147,14 +148,19 @@ final class CorpusRecipe private (
   /** e2+e8's near dedup: MinHash-LSH candidate pairs → connected
     * components → keep each cluster's min-id representative. The pair
     * path is the capped/salted [[TextDedup.minhashBandPairs]] machinery.
+    *
+    * The frame is pinned once with a lazy `localCheckpoint` (the
+    * [[scrubSharedPassages]] precedent), so the pair path and the kept
+    * rows share one evaluation of the upstream steps (scrub, exact-dedup
+    * shuffle) instead of each planning its own. Under AQE the pin runs the
+    * upstream's shuffle map stages at composition, and the components
+    * probe runs the pair plan; CorpusRecipeSpec pins the job counts.
     */
   def nearDedup(k: Int = 8, shingleK: Int = 3, bands: Int = 4): CorpusRecipe = {
-    val pairs = TextDedup.minhashBandPairs(frame, textCol, idCol, k, shingleK, bands)
-    val reps = graft.operators.ConnectedComponents
-      .minLabel(frame.select(col(idCol)), pairs, "d1", "d2")
-      .where(col("cluster") === col(idCol))
-      .select(col(idCol))
-    next(frame.join(reps, Seq(idCol), "left_semi"))
+    val pinned = frame.localCheckpoint(eager = false)
+    val pairs = TextDedup.minhashBandPairs(pinned, textCol, idCol, k, shingleK, bands)
+    next(CorpusRecipe.keepClusterMins(pinned, idCol, pairs,
+      ConnectedComponents.DefaultLocalThreshold))
   }
 
   /** t6's PII scrub applied IN PLACE: emails, dotted-quad IPs, and phone
@@ -518,4 +524,26 @@ object CorpusRecipe {
       idCol: String = "doc_id",
       textCol: String = "text"): CorpusRecipe =
     new CorpusRecipe(df, idCol, textCol)
+
+  /** [[CorpusRecipe.nearDedup]]'s keep step: the rows of `frame` whose id
+    * is its component's minimum in the (d1, d2) `pairs` graph. Pairs that
+    * fit `localThreshold` finish on the driver
+    * ([[ConnectedComponents.localRoots]]) and one broadcast anti join drops
+    * the merged-away ids, so the plan reads `frame` once. Over it,
+    * [[ConnectedComponents.labelRounds]] labels every id, starting from the
+    * pairs the probe pinned, and a semi join keeps the minimums. Both paths
+    * drop null-id rows: a null id is no component's minimum.
+    */
+  private[graft] def keepClusterMins(frame: DataFrame, idCol: String,
+      pairs: DataFrame, localThreshold: Long): DataFrame =
+    ConnectedComponents.localRoots(pairs, localThreshold) match {
+      case Right(roots) =>
+        frame.where(col(idCol).isNotNull)
+          .join(broadcast(roots.select(col("id").as(idCol))), Seq(idCol), "left_anti")
+      case Left(pinned) =>
+        val reps = ConnectedComponents.labelRounds(frame.select(col(idCol)), pinned, "d1", "d2")
+          .where(col("cluster") === col(idCol))
+          .select(col(idCol))
+        frame.join(reps, Seq(idCol), "left_semi")
+    }
 }

@@ -29,10 +29,16 @@ import org.apache.spark.sql.functions._
   * that fits in a few MB is pure scheduling overhead — measured 2–20 s PER
   * ROUND on a 1.8k-edge graph at 32 threads, vs <1 ms of driver union-find.
   * This mirrors GraphFrames' connected-components local-finish optimization.
-  * The bound is explicit and checked against counts the convergence tests
-  * already compute, so driver memory stays O(localThreshold) by
-  * construction; pass `localThreshold = 0` to force the fully distributed
-  * path (the specs do, to pin its correctness).
+  * The decision is one bounded action, [[localRoots]]: it pins the edges
+  * with a lazy checkpoint, collects at most `localThreshold + 1` of them in
+  * one job and finishes them when they fit — no eager checkpoint and no
+  * count first; over the threshold the rounds start from the pin, so the
+  * edge plan runs once either way. [[minLabel]] makes the decision once on
+  * its input; [[alternatingStar]] makes it when the edge count its
+  * convergence signature already computes drops under the threshold.
+  * Driver memory stays O(localThreshold) by construction; pass
+  * `localThreshold = 0` to force the fully distributed path (the specs do,
+  * to pin its correctness).
   */
 object ConnectedComponents {
 
@@ -50,86 +56,101 @@ object ConnectedComponents {
     case _ => sys.error(s"unsupported id type for local CC finish: ${a.getClass}")
   }
 
-  /** Union-find (min id as representative) over a collected edge list, then
-    * a broadcast map-back onto the distributed vertex set. Exact same
-    * (id, cluster) contract as the distributed rounds.
+  /** The driver finish of both algorithms, as ONE bounded action. `edges`
+    * (its first two columns) is pinned with a lazy `localCheckpoint`, which
+    * under AQE runs the edge plan's shuffle map stages; then one job
+    * collects at most `localThreshold + 1` of the pinned rows and
+    * union-finds them with the min id as representative.
+    *
+    * Right: `(id, root)` rows, typed as the edge columns, for every
+    * endpoint whose component root is a smaller id — at most the
+    * endpoints, roots absent. Left: the pinned edges, when there are more
+    * than `localThreshold`; the job has computed all of them, so rounds
+    * over the pin do not evaluate the edge plan again.
+    *
+    * In the job every task of the edge plan's final stage keeps at most
+    * `localThreshold + 1` edges, and an RDD shuffle (a stage of the same
+    * job: AQE splits only SQL exchanges into jobs) funnels them into one
+    * task that keeps `localThreshold + 1` again. So the final stage stays
+    * parallel and the driver holds at most `localThreshold + 1` edges. A
+    * SQL `limit.collect()` plans as CollectLimitExec, which scans one
+    * partition first and then scales up (two jobs for an edge set that
+    * fits); a limit under `coalesce(1)` runs the whole final stage as one
+    * task. Duplicate edges count toward the threshold; union-find ignores
+    * them. Edges with a null endpoint are skipped: a null id joins nothing
+    * in the distributed rounds either.
     *
     * Integral ids (the common case — doc ids) collect as primitive Long
     * pairs through a typed Dataset and run union-find over a LongMap, so a
-    * threshold-sized collect is ~16 B/edge of tuples plus open-addressed
-    * primitive-key maps — not generic Rows plus a boxed Any→Any map (which
+    * threshold-sized collect is ~16 B/edge of tuples plus an open-addressed
+    * primitive-key map — not generic Rows plus a boxed Any→Any map (which
     * at the 1M-edge default threshold is hundreds of MB, ADVICE r5). Other
-    * id types (strings) keep the generic Row path.
+    * id types (strings) collect generic Rows.
     */
-  private def finishLocal(
-      vertices: DataFrame, idName: String, edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val idType = edges.schema.fields.head.dataType
-    idType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        finishLocalLong(vertices, idName, edges)
-      case _ => finishLocalGeneric(vertices, idName, edges)
-    }
-  }
-
-  private def finishLocalLong(
-      vertices: DataFrame, idName: String, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val idType = edges.schema.fields.head.dataType
-    val cols = edges.columns
-    val pairs = edges
-      .select(col(cols(0)).cast("long"), col(cols(1)).cast("long"))
-      .as[(Long, Long)].collect()
-    val parent = new scala.collection.mutable.LongMap[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    val ids = new scala.collection.mutable.LongMap[Unit]
-    pairs.foreach { case (a, b) => ids.update(a, ()); ids.update(b, ()) }
-    val mapping = ids.keysIterator.map(id => (id, find(id))).toSeq
-    val mdf = mapping.toDF("id", "__root")
-      .select(col("id").cast(idType).as("id"), col("__root").cast(idType).as("__root"))
-    vertices.select(col(idName).as("id"))
-      .join(broadcast(mdf), Seq("id"), "left")
-      .select(col("id").as(idName), coalesce(col("__root"), col("id")).as("cluster"))
-  }
-
-  private def finishLocalGeneric(
-      vertices: DataFrame, idName: String, edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructField, StructType}
+  private[graft] def localRoots(edges: DataFrame, localThreshold: Long): Either[DataFrame, DataFrame] = {
+    import org.apache.spark.sql.{Dataset, Row}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+    import scala.collection.mutable
     import scala.jdk.CollectionConverters._
-    val spark = vertices.sparkSession
-    val rows = edges.collect()
-    val parent = new scala.collection.mutable.HashMap[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x // path compression
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
+    import scala.reflect.ClassTag
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pinned = edges.select(edges.columns.take(2).map(col).toIndexedSeq: _*)
+      .localCheckpoint(eager = false)
+    val Array(a, b) = pinned.columns.map(col)
+    val idType = pinned.schema.fields.head.dataType
+    val nonNull = pinned.where(a.isNotNull && b.isNotNull)
+    val cap = localCap(localThreshold)
+    def bounded[T: ClassTag](ds: Dataset[T]): Option[Array[T]] = {
+      val rows = ds.rdd.mapPartitions(_.take(cap + 1)).repartition(1)
+        .mapPartitions(_.take(cap + 1)).collect()
+      Some(rows).filter(_.length <= cap)
     }
-    rows.foreach { r =>
-      val (ra, rb) = (find(r.get(0)), find(r.get(1)))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    def roots[K](pairs: Array[(K, K)], parent: mutable.Map[K, K])(less: (K, K) => Boolean) = {
+      def find(x: K): K = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x // path compression
+        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      pairs.foreach { case (x, y) =>
+        val (rx, ry) = (find(x), find(y))
+        if (rx != ry) { if (less(rx, ry)) parent(ry) = rx else parent(rx) = ry }
+      }
+      // only merged-away ids ever get a parent entry
+      parent.keys.toSeq.map(id => (id, find(id)))
     }
-    val idType = edges.schema.fields.head.dataType
-    val mapping = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
-      .toSet[Any].iterator.map(id => Row(id, find(id))).toSeq
-    val mdf = spark.createDataFrame(mapping.asJava,
-      StructType(Seq(StructField("id", idType), StructField("__root", idType))))
+    val mapping = idType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        bounded(nonNull.select(a.cast("long"), b.cast("long")).as[(Long, Long)]).map { pairs =>
+          roots(pairs, new mutable.LongMap[Long])(_ < _).toDF("id", "root")
+            .select(col("id").cast(idType).as("id"), col("root").cast(idType).as("root"))
+        }
+      case _ =>
+        bounded(nonNull).map { rows =>
+          val mapping = roots(rows.map(r => (r.get(0), r.get(1))), new mutable.HashMap[Any, Any])(lt)
+          spark.createDataFrame(mapping.map { case (id, root) => Row(id, root) }.asJava,
+            StructType(Seq(StructField("id", idType), StructField("root", idType))))
+        }
+    }
+    mapping.toRight(pinned)
+  }
+
+  /** The most edges [[localRoots]] collects: `localThreshold`, clamped to
+    * what an Array holds (at most Int.MaxValue - 2 elements, one over).
+    */
+  private def localCap(localThreshold: Long): Int =
+    math.max(0L, math.min(localThreshold, Int.MaxValue - 3L)).toInt
+
+  /** (id, cluster) over every vertex from [[localRoots]]' mapping: one
+    * broadcast left join, ids without a mapping are their own root.
+    */
+  private def withRoots(vertices: DataFrame, roots: DataFrame): DataFrame = {
+    val idName = vertices.columns.head
     vertices.select(col(idName).as("id"))
-      .join(broadcast(mdf), Seq("id"), "left")
-      .select(col("id").as(idName), coalesce(col("__root"), col("id")).as("cluster"))
+      .join(broadcast(roots), Seq("id"), "left")
+      .select(col("id").as(idName), coalesce(col("root"), col("id")).as("cluster"))
   }
 
   /** @param vertices one column, every vertex id (pairs alone would drop
@@ -141,13 +162,24 @@ object ConnectedComponents {
       vertices: DataFrame,
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20,
-      localThreshold: Long = DefaultLocalThreshold): DataFrame = {
-    val idName = vertices.columns.head
-    val raw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
+      localThreshold: Long = DefaultLocalThreshold): DataFrame =
     // Label propagation never shrinks the edge set, so the local-finish
     // decision is a one-shot check on the input size.
-    if (raw.count() <= localThreshold) return finishLocal(vertices, idName, raw)
+    localRoots(pairs.select(col(aCol), col(bCol)), localThreshold) match {
+      case Right(roots) => withRoots(vertices, roots)
+      case Left(pinned) => labelRounds(vertices, pinned, aCol, bCol, maxIter)
+    }
+
+  /** [[minLabel]]'s distributed rounds over the pinned edges a
+    * [[localRoots]] probe returned when they exceeded its threshold.
+    */
+  private[graft] def labelRounds(
+      vertices: DataFrame,
+      pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int = 20): DataFrame = {
+    val idName = vertices.columns.head
+    // `pairs` is already pinned: the union reads it twice, computes it once
+    val raw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val edges = raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
     var labels = vertices.select(col(idName).as("id"), col(idName).as("lbl"))
@@ -240,7 +272,10 @@ object ConnectedComponents {
       // Star rounds preserve connectivity while strictly shrinking toward a
       // star per component, so the moment the surviving edge set is small
       // enough, union-find on the driver finishes the job exactly.
-      if (sig._1 <= localThreshold) return finishLocal(vertices, idName, edges)
+      if (sig._1 <= localCap(localThreshold)) localRoots(edges, localThreshold) match {
+        case Right(roots) => return withRoots(vertices, roots)
+        case Left(_) => // not reached: the signature counted at most the cap
+      }
       // a non-star edge set maps vertices to non-minimal roots, some to
       // several: fail rather than mis-cluster
       if (i == maxIter) throw new IllegalStateException(

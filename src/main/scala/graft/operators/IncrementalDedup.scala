@@ -57,7 +57,7 @@ object IncrementalDedup {
   def bandSignatures(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int, bands: Int): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
+    TextDedup.requireBanding(k, bands)
     val rowsPer = k / bands
     val wide = TextDedup.minhashWide(df, textCol, idCol, k, shingleK)
     val bandStructs = array((0 until bands).map { b =>

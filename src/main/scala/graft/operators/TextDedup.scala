@@ -82,6 +82,10 @@ object TextDedup {
   def minhashWide(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int): DataFrame = {
+    // on the driver: inside a task the sketch loop would read past the
+    // token array (shingleK <= 0), and k = 0 leaves no aggregate
+    require(k >= 1, s"k (MinHash families) must be >= 1, got $k")
+    require(shingleK >= 1, s"shingleK (tokens per shingle) must be >= 1, got $shingleK")
     val sketch = udf((t: String) => minhashSketch(t, k, shingleK))
     val aggs = (0 until k).map(j => min(col("__sig")(j)).as(s"m$j"))
     df.repartition(col(idCol))
@@ -113,7 +117,7 @@ object TextDedup {
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int, bands: Int,
       smallCap: Int = 1024, maxBucket: Long = 1L << 16): DataFrame = {
-    require(k % bands == 0, "k must divide into bands")
+    requireBanding(k, bands)
     // band signatures shared with the incremental path: a signature lake
     // written by IncrementalDedup.bandSignatures buckets identically
     val buckets = IncrementalDedup.bandSignatures(df, textCol, idCol, k, shingleK, bands)
@@ -122,6 +126,13 @@ object TextDedup {
     bucketPairs(buckets, smallCap, maxBucket, "graft.lsh.minhash")
       .select(col("p1.id").as("d1"), col("p2.id").as("d2"))
       .distinct()
+  }
+
+  /** LSH banding arguments: `bands` >= 1 equal bands of k >= 1 families. */
+  private[graft] def requireBanding(k: Int, bands: Int): Unit = {
+    require(k >= 1, s"k (MinHash families) must be >= 1, got $k")
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
   }
 
   /** Bucket-local all-pairs emission with skew control. Input: one row per

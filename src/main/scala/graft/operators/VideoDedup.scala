@@ -72,7 +72,7 @@ object VideoDedup {
       frames: DataFrame, videoCol: String, fpCol: String,
       k: Int = 8, bands: Int = 4, tau: Double = 0.5,
       smallCap: Int = 1024, maxBucket: Long = 1L << 16): DataFrame = {
-    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
+    TextDedup.requireBanding(k, bands)
     val rowsPer = k / bands
     val wide = signatures(frames, videoCol, fpCol, k)
     val bandStructs = array((0 until bands).map { b =>

@@ -64,8 +64,23 @@ class BucketPairsSpec extends SparkSpec {
 
   test("buckets over maxBucket are dropped; others unaffected") {
     val buckets = mkBuckets(Map("mega" -> 200, "small" -> 6))
-    val out = pairsOf(TextDedup.bucketPairs(buckets, 16, maxBucket = 100, "t3"))
+    // the drop is accounted through observe, read by a QueryExecutionListener
+    val seen = new scala.collection.concurrent.TrieMap[String, (Long, Long)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.get("t3").foreach { r =>
+          seen.put("t3", (r.getAs[Long]("max_bucket"), r.getAs[Long]("dropped_members")))
+        }
+      override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      // JobCounter drains the listener bus, so the listener has run
+      org.apache.spark.JobCounter(spark.sparkContext)(
+        pairsOf(TextDedup.bucketPairs(buckets, 16, maxBucket = 100, "t3")))._1
+    } finally spark.listenerManager.unregister(listener)
     assert(out == allPairs("small", 6))
+    assert(seen.get("t3").contains((200L, 200L)), s"observed: $seen")
   }
 
   test("minhashBandPairs: tiny smallCap (forced salting) reproduces the default result") {

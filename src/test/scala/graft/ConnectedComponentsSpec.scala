@@ -137,4 +137,51 @@ class ConnectedComponentsSpec extends SparkSpec {
     both(t => ConnectedComponents.alternatingStar(verts, pairs, "d1", "d2",
       localThreshold = t), canonical)
   }
+
+  test("minLabel local path: one bounded collect after the pair plan's map stages") {
+    // pairs behind one exchange (as every pair producer's are): under AQE
+    // the exchange's map stage is one job and the bounded collect of at
+    // most localThreshold + 1 edges is the other — no count first
+    val verts = (1L to 7L).toDF("doc_id")
+    val pairs = Seq((2L, 3L), (1L, 2L), (3L, 4L), (5L, 6L), (1L, 2L)).toDF("d1", "d2").distinct()
+    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L)
+    val (clusters, jobs) = org.apache.spark.JobCounter(spark.sparkContext) {
+      ConnectedComponents.minLabel(verts, pairs, "d1", "d2")
+    }
+    // 2: the pin runs the exchange's map stage, the probe is the other
+    assert(jobs == 2, s"minLabel's local path ran $jobs jobs")
+    assert(asMap(clusters) == expect)
+    // string ids take the generic Row path through the same union-find
+    val named = ConnectedComponents.minLabel(
+      Seq("a", "b", "c", "d", "e").toDF("name"),
+      Seq(("c", "b"), ("b", "a"), ("e", "d")).toDF("x", "y"), "x", "y")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(named == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d", "e" -> "d"))
+  }
+
+  test("minLabel's probe keeps the edge stage parallel; over the threshold the rounds reuse it") {
+    // four stars over 4 partitions and no exchange, so the probe job's first
+    // stage is the edge plan's final stage; the tagging udf counts how often
+    // the edge plan is evaluated
+    val evals = spark.sparkContext.longAccumulator("edge evaluations")
+    val tag = org.apache.spark.sql.functions.udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val pairs = spark.range(0, 40, 1, 4).where($"id" % 10 =!= 0)
+      .select(tag($"id").as("d1"), ($"id" - $"id" % 10).as("d2"))
+    val verts = (0L until 40L).toDF("doc_id")
+    val expect = (0L until 40L).map(i => i -> (i - i % 10)).toMap
+    val (local, jobs) = org.apache.spark.JobCounter.stageTasks(spark.sparkContext) {
+      asMap(ConnectedComponents.minLabel(verts, pairs, "d1", "d2"))
+    }
+    assert(local == expect)
+    // one probe job: 4 edge tasks, then the 1-task funnel; then the
+    // result's own collect
+    assert(jobs.head == Seq(4, 1), jobs.toString)
+    assert(evals.value == 36)
+    evals.reset()
+    // over the threshold: the probe collects 11 edges but has computed and
+    // pinned all 36, and the rounds start from the pin
+    assert(asMap(ConnectedComponents.minLabel(verts, pairs, "d1", "d2",
+      localThreshold = 10)) == expect)
+    assert(evals.value == 36, s"the edge plan ran ${evals.value / 36.0} times")
+  }
 }

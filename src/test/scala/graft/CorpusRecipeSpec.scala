@@ -35,6 +35,80 @@ class CorpusRecipeSpec extends SparkSpec {
     assert(kept == Set(1L, 4L, 5L), kept.toString)
   }
 
+  test("nearDedup local-finish edge: n edges finish on the driver, n - 1 run rounds, same rows") {
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val a = "the quick brown fox jumps over the lazy dog"
+    val withNulls = Seq[(java.lang.Long, String)](
+      (1L, a), (2L, a), (3L, "the quick brown fox jumps over the sleepy dog"),
+      (4L, "completely different words entirely unrelated text here now"),
+      (5L, "completely different words entirely unrelated text here now"),
+      (null, a), // a null id inside the near-dup pairs
+      (null, "an orphan row with no id and no near duplicate anywhere"),
+      (7L, null), // null text: no sketch, no pairs
+      (8L, "a second fully unrelated document with other vocabulary"))
+      .toDF("doc_id", "text")
+    val pairs = TextDedup.minhashBandPairs(withNulls, "text", "doc_id", 8, 3, 4)
+    assert(pairs.where($"d1".isNull || $"d2".isNull).count() > 0)
+    // the threshold counts edges with two ids; null-id pairs join nothing
+    val n = pairs.where($"d1".isNotNull && $"d2".isNotNull).count()
+    def keep(t: Long) = CorpusRecipe.keepClusterMins(withNulls, "doc_id", pairs, t)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.get(0)), Option(r.getString(1)))).toSet
+    def joinTypes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j.joinType }
+    val (local, dist) = (keep(n), keep(n - 1))
+    assert(joinTypes(local) == Seq(LeftAnti) && joinTypes(dist) == Seq(LeftSemi))
+    assert(rows(local) == rows(dist))
+    // the rows the distributed rounds have always kept: null ids dropped,
+    // the null-text row kept (the driver finish used to throw on the
+    // null-id pairs)
+    assert(rows(local).map(_._1) == Set(1L, 4L, 7L, 8L).map(Some(_)))
+    assert(rows(CorpusRecipe(withNulls).nearDedup().frame) == rows(local))
+  }
+
+  test("curate pass: a composed write runs at most 8 jobs; nearDedup's pin saves jobs") {
+    val corpus = (0 until 40).map { i =>
+      val body = s"document $i talks about topic ${i % 7} with words w$i x$i y$i z$i"
+      val text = i % 10 match {
+        case 0 => "shared page text repeated across mirrors of the same site"
+        case 1 => "shared page text repeated across mirrors of the same site today"
+        case 2 => s"$body contact someone$i@example.com"
+        case _ => body
+      }
+      (i.toLong, text)
+    }.toDF("doc_id", "text").repartition(4).cache()
+    corpus.count()
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("curate-jobs").toString
+    try {
+      val (_, pinned) = org.apache.spark.JobCounter(sc) {
+        CorpusRecipe(corpus).scrubPii().exactDedup().nearDedup().countTokens()
+          .frame.write.parquet(s"$dir/pinned")
+      }
+      // the same pass with nearDedup's keep step over the unpinned frame
+      val (_, unpinned) = org.apache.spark.JobCounter(sc) {
+        val upstream = CorpusRecipe(corpus).scrubPii().exactDedup().frame
+        val pairs = TextDedup.minhashBandPairs(upstream, "text", "doc_id", 8, 3, 4)
+        CorpusRecipe(CorpusRecipe.keepClusterMins(upstream, "doc_id", pairs,
+          graft.operators.ConnectedComponents.DefaultLocalThreshold)).countTokens()
+          .frame.write.parquet(s"$dir/unpinned")
+      }
+      // pinned, 8: the exact-dedup map stage (run by the pin at
+      // composition), the pair plan's four map stages and its bounded
+      // collect, then the write's two — the broadcast of the dropped ids (a
+      // local relation broadcasts through one job) and the write itself.
+      // Unpinned, 9: the write plans the exact-dedup shuffle again.
+      assert((pinned, unpinned) == ((8, 9)), s"pinned $pinned jobs, unpinned $unpinned")
+      def ids(p: String) = spark.read.parquet(p).select("doc_id").as[Long].collect().toSet
+      assert(ids(s"$dir/pinned") == ids(s"$dir/unpinned"))
+      assert(ids(s"$dir/pinned").size < 40)
+    } finally {
+      corpus.unpersist()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("sample and tokenBudget delegate to the Sampling operators verbatim") {
     val viaApi = CorpusRecipe(docs)
       .sample("lang", Map("en" -> 0.9), defaultRate = 1.0).frame

@@ -14,6 +14,35 @@ class TextDedupSpec extends SparkSpec {
     (5L, "the quick brown fox jumps over the lazy dog", "de") // dup, other block
   ).toDF("doc_id", "text", "lang")
 
+  test("bad MinHash arguments fail on the driver, before any job runs") {
+    import graft.operators.{IncrementalDedup, VideoDedup}
+    val frames = Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("video", "fp")
+    val bad: Seq[(String, () => Any)] = Seq(
+      "minhashWide k = 0" -> (() => TextDedup.minhashWide(docs, "text", "doc_id", 0, 3)),
+      "minhashWide shingleK = 0" -> (() => TextDedup.minhashWide(docs, "text", "doc_id", 8, 0)),
+      "minhashWide shingleK = -1" -> (() => TextDedup.minhashWide(docs, "text", "doc_id", 8, -1)),
+      "bandSignatures bands = 0" ->
+        (() => IncrementalDedup.bandSignatures(docs, "text", "doc_id", 8, 3, 0)),
+      "bandSignatures bands = 3" ->
+        (() => IncrementalDedup.bandSignatures(docs, "text", "doc_id", 8, 3, 3)),
+      "minhashBandPairs bands = 0" ->
+        (() => TextDedup.minhashBandPairs(docs, "text", "doc_id", 8, 3, 0)),
+      "minhashBandPairs bands = -2" ->
+        (() => TextDedup.minhashBandPairs(docs, "text", "doc_id", 8, 3, -2)),
+      "minhashBandPairs k = 0" -> (() => TextDedup.minhashBandPairs(docs, "text", "doc_id", 0, 3, 4)),
+      "minhashBandPairs shingleK = 0" ->
+        (() => TextDedup.minhashBandPairs(docs, "text", "doc_id", 8, 0, 4)),
+      "nearPairs bands = 0" -> (() => VideoDedup.nearPairs(frames, "video", "fp", k = 8, bands = 0)),
+      "nearPairs k = 0" -> (() => VideoDedup.nearPairs(frames, "video", "fp", k = 0, bands = 4)))
+    bad.foreach { case (what, call) =>
+      val (e, jobs) = org.apache.spark.JobCounter(spark.sparkContext) {
+        intercept[IllegalArgumentException](call())
+      }
+      assert(jobs == 0, s"$what ran $jobs jobs before failing")
+      assert(e.getMessage.matches(".*(k|shingleK|bands).*"), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("jaccardPairs finds exact dup with jaccard 1.0, respects blocking") {
     val pairs = TextDedup.jaccardPairs(docs, "text", "doc_id", "lang", 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

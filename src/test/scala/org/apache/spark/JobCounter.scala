@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -10,16 +12,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   */
 object JobCounter {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
+    val (out, jobs) = stageTasks(sc)(body)
+    (out, jobs.size)
+  }
+
+  /** The jobs a block of code submits, each as its stages' task counts
+    * (in stage id order), in job start order.
+    */
+  def stageTasks[T](sc: SparkContext)(body: => T): (T, Seq[Seq[Int]]) = {
+    val jobs = new ConcurrentLinkedQueue[Seq[Int]]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.sortBy(_.stageId).map(_.numTasks))
     }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       val out = body
       sc.listenerBus.waitUntilEmpty()
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
