@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.E): tokenization, cross-engine-stable hashing, shingling,
   * language-ID heuristics, and quality scoring over the `documents` table.
   *
-  * All built from codegen'd built-ins (no UDFs). Hashing uses md5 → first 15
-  * hex digits → 60-bit positive long, which both this engine and the DuckDB
-  * oracle can compute bit-identically (`conv(substring(md5(x),1,15),16,10)`).
+  * The Column forms are codegen'd built-ins (no UDFs); [[hash60Local]] and
+  * [[md5Hex]] are their JVM twins, and the MinHash sketch and banding live
+  * in [[MinHash]]. Hashing uses md5 → first 15 hex digits → 60-bit positive
+  * long, which both this engine and the DuckDB oracle can compute
+  * bit-identically (`conv(substring(md5(x),1,15),16,10)`).
   */
 object TextFunctions {
 
@@ -40,7 +42,7 @@ object TextFunctions {
   /** The 60-bit hash of an md5 digest: its first 15 hex digits (bytes 0–6
     * and the high nibble of byte 7).
     */
-  private def hash60Of(d: Array[Byte]): Long = {
+  private[functions] def hash60Of(d: Array[Byte]): Long = {
     var acc = 0L
     var i = 0
     while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
@@ -50,73 +52,6 @@ object TextFunctions {
   /** Lower-case hex md5 of `b` — the JVM form of SQL `md5()`. */
   private[graft] def md5Hex(b: Array[Byte]): String =
     java.util.HexFormat.of().formatHex(MessageDigest.getInstance("MD5").digest(b))
-
-  /** Row-local MinHash sketch — THE one implementation: the batch
-    * [[graft.operators.TextDedup.minhashWide]] and every streaming dedup
-    * path call it. Tokens are `text.split(" ", -1)`; each `shingleK`-token
-    * shingle is md5-hashed over its tokens' UTF-8 bytes joined by single
-    * spaces (no shingle string is built). h1 is the digest's 60-bit
-    * [[hash60Local]] value, h2 its bytes 8–14 (56 bits) — the [[hashPair]]
-    * split — and m_j = min over shingles of [[kmHash]](h1, h2, j). Equal to
-    * the DuckDB oracle's e2_minhash_sig; StreamingNearDedupSpec keeps the
-    * SQL form (posexplode → lead window → md5 → conv) as the reference.
-    * Null when `text` is null or has fewer than `shingleK` tokens.
-    */
-  def minhashSketch(text: String, k: Int, shingleK: Int): Array[Long] = {
-    if (text == null) return null
-    val toks = text.split(" ", -1).map(_.getBytes(UTF_8))
-    if (toks.length < shingleK) return null
-    val md = MessageDigest.getInstance("MD5")
-    val d = new Array[Byte](16)
-    val mins = Array.fill(k)(Long.MaxValue)
-    var s = 0
-    while (s + shingleK <= toks.length) {
-      md.update(toks(s))
-      var t = s + 1
-      while (t < s + shingleK) { md.update(' '.toByte); md.update(toks(t)); t += 1 }
-      md.digest(d, 0, 16)
-      val h1 = hash60Of(d)
-      var h2 = 0L
-      var i = 8
-      while (i < 15) { h2 = (h2 << 8) | (d(i) & 0xffL); i += 1 }
-      var j = 0
-      while (j < k) {
-        val h = (h1 + h2 * j) & Mask60
-        if (h < mins(j)) mins(j) = h
-        j += 1
-      }
-      s += 1
-    }
-    mins
-  }
-
-  private val Mask60 = (1L << 60) - 1
-
-  /** Two independent hashes from ONE md5: h1 = bits of hex[1..15] (60-bit),
-    * h2 = bits of hex[17..30] (56-bit — kept under 57 bits so
-    * `h1 + 7 * h2` cannot overflow a signed long, ANSI-safely).
-    */
-  def hashPair(c: Column): Column = {
-    val m = md5(c)
-    struct(
-      conv(substring(m, 1, 15), 16, 10).cast("long").as("h1"),
-      conv(substring(m, 17, 14), 16, 10).cast("long").as("h2"))
-  }
-
-  /** Kirsch–Mitzenmacher composite hash family: h_j = (h1 + j*h2) mod 2^60.
-    * One md5 yields arbitrarily many families ("Less Hashing, Same
-    * Performance", Kirsch & Mitzenmacher 2006) — at 100 TB the k-fold md5
-    * saving is the difference between hash-bound and scan-bound
-    * minhashing. The families are correlated, NOT as good as independent
-    * hashes here: perfbench measured about 1 in 2,000 near pairs at
-    * J ≈ 0.98 missed by the 8-family, 4-band LSH, where independent
-    * families would miss (1 − J²)⁴ ≈ 2.5e-6 (perfbench/README.md, the
-    * near-dup check). The bits stay as they are: the oracle hashes and the
-    * gate rows depend on them. The DuckDB rendering is
-    * `(h1 + j*h2) & 1152921504606846975`.
-    */
-  def kmHash(h1: Column, h2: Column, j: Int): Column =
-    (h1 + h2 * lit(j.toLong)).bitwiseAND(lit(Mask60))
 
   /** k-word shingles as space-joined strings; empty array when the document
     * has fewer than k tokens. Built from `zip_with` over k shifted slices:

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.MinHash
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,23 +49,20 @@ object IncrementalDedup {
     */
   private[graft] val InListPruneMax = 256
 
-  /** The signature-lake rows for a batch: (idCol, band, bsig) — band
-    * signatures of [[TextDedup.minhashWide]]'s k-family sketch, md5 over
-    * each band's `k/bands` minhash rows. Values are identical to the
-    * banding [[TextDedup.minhashBandPairs]] buckets on, so a lake written
-    * by this function is probe-compatible with the batch dedup's pairs.
+  /** The signature-lake rows for a batch: (idCol, band, bsig) — the
+    * [[MinHash.bands]] of [[TextDedup.minhashWide]]'s k-family sketch.
+    * [[TextDedup.minhashBandPairs]] buckets on these rows, so a lake
+    * written by this function is probe-compatible with the batch dedup's
+    * pairs.
     */
   def bandSignatures(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int, bands: Int): DataFrame = {
-    TextDedup.requireBanding(k, bands)
-    val rowsPer = k / bands
+    MinHash.requireBanding(k, bands)
+    val banding = udf((sig: Seq[Long]) => MinHash.bands(sig, bands))
     val wide = TextDedup.minhashWide(df, textCol, idCol, k, shingleK)
-    val bandStructs = array((0 until bands).map { b =>
-      val cols = (b * rowsPer until (b + 1) * rowsPer).map(j => col(s"m$j"))
-      struct(lit(b).as("band"), md5(concat_ws(",", cols: _*)).as("bsig"))
-    }: _*)
-    wide.select(col(idCol), explode(bandStructs).as("bs"))
+    val sig = array((0 until k).map(j => col(s"m$j")): _*)
+    wide.select(col(idCol), explode(banding(sig)).as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.bsig").as("bsig"))
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.MinHash
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -73,7 +74,7 @@ object TextDedup {
   }
 
   /** Wide (one row per doc) signature matrix m0..m{k-1}: one row-local
-    * [[minhashSketch]] per document after the spread. The groupBy reuses
+    * [[MinHash.sketch]] per document after the spread. The groupBy reuses
     * the spread's partitioning (no extra exchange) and merges rows that
     * share an id by element-wise min. Null sketches are dropped after the
     * aggregate: a filter on the sketch column would be pushed below the
@@ -82,11 +83,8 @@ object TextDedup {
   def minhashWide(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int): DataFrame = {
-    // on the driver: inside a task the sketch loop would read past the
-    // token array (shingleK <= 0), and k = 0 leaves no aggregate
-    require(k >= 1, s"k (MinHash families) must be >= 1, got $k")
-    require(shingleK >= 1, s"shingleK (tokens per shingle) must be >= 1, got $shingleK")
-    val sketch = udf((t: String) => minhashSketch(t, k, shingleK))
+    MinHash.requireSketch(k, shingleK)
+    val sketch = udf((t: String) => MinHash.sketch(t, k, shingleK))
     val aggs = (0 until k).map(j => min(col("__sig")(j)).as(s"m$j"))
     df.repartition(col(idCol))
       .select(col(idCol), sketch(col(textCol)).as("__sig"))
@@ -117,22 +115,14 @@ object TextDedup {
       df: DataFrame, textCol: String, idCol: String,
       k: Int, shingleK: Int, bands: Int,
       smallCap: Int = 1024, maxBucket: Long = 1L << 16): DataFrame = {
-    requireBanding(k, bands)
-    // band signatures shared with the incremental path: a signature lake
-    // written by IncrementalDedup.bandSignatures buckets identically
+    // band signatures shared with the incremental path (which checks the
+    // arguments): a signature lake written by it buckets identically
     val buckets = IncrementalDedup.bandSignatures(df, textCol, idCol, k, shingleK, bands)
       .select(struct(col("band"), col("bsig")).as("__bk"),
         struct(col(idCol).as("id")).as("__m"))
     bucketPairs(buckets, smallCap, maxBucket, "graft.lsh.minhash")
       .select(col("p1.id").as("d1"), col("p2.id").as("d2"))
       .distinct()
-  }
-
-  /** LSH banding arguments: `bands` >= 1 equal bands of k >= 1 families. */
-  private[graft] def requireBanding(k: Int, bands: Int): Unit = {
-    require(k >= 1, s"k (MinHash families) must be >= 1, got $k")
-    require(bands >= 1, s"bands must be >= 1, got $bands")
-    require(k % bands == 0, s"bands ($bands) must divide k ($k)")
   }
 
   /** Bucket-local all-pairs emission with skew control. Input: one row per

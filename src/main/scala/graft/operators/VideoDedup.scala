@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions.{hashPair, kmHash}
+import graft.functions.MinHash
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,27 +17,33 @@ import org.apache.spark.sql.functions._
   * LSH through the capped/salted bucket machinery, exact verify) carry
   * video dedup unchanged.
   *
-  * Scale shape: signatures are one map-side-combined groupBy over
-  * (video, frame-hash) rows; candidates ride [[TextDedup.bucketPairs]]
-  * (triangle-salted, capped, observe-metered); the exact-Jaccard verify
-  * joins only candidate videos' fingerprint sets. No stage is O(n²) in
-  * the catalog size.
+  * Scale shape: one map-side-combined groupBy builds each video's
+  * fingerprint set, which feeds both the [[MinHash]] sketch and the exact
+  * Jaccard verify; candidates ride [[TextDedup.bucketPairs]]
+  * (triangle-salted, capped, observe-metered). No stage is O(n²) in the
+  * catalog size.
   */
 object VideoDedup {
 
-  /** Wide signature matrix m0..m{k-1} per video: min over the video's
-    * distinct frame fingerprints of k KM hash families (one md5 per
-    * distinct (video, fingerprint) — same hashing discipline as
-    * [[TextDedup.minhashWide]]).
+  /** (video, fps): each video's sorted distinct non-null fingerprints. */
+  private def fingerprintSets(
+      frames: DataFrame, videoCol: String, fpCol: String): DataFrame =
+    frames.groupBy(col(videoCol))
+      .agg(sort_array(collect_set(col(fpCol).cast("long"))).as("fps"))
+
+  /** Wide signature matrix m0..m{k-1} per video: the [[MinHash.sketch]] of
+    * its distinct frame fingerprints (one md5 per fingerprint — same
+    * hashing discipline as [[TextDedup.minhashWide]]); all null for a
+    * video with no non-null fingerprint.
     */
   def signatures(
       frames: DataFrame, videoCol: String, fpCol: String, k: Int): DataFrame = {
-    val fp = frames.select(col(videoCol), col(fpCol).cast("long").as("__fp"))
-      .distinct()
-      .select(col(videoCol), hashPair(col("__fp").cast("string")).as("hp"))
-      .select(col(videoCol), col("hp.h1").as("h1"), col("hp.h2").as("h2"))
-    val aggs = (0 until k).map(j => min(kmHash(col("h1"), col("h2"), j)).as(s"m$j"))
-    fp.groupBy(col(videoCol)).agg(aggs.head, aggs.tail: _*)
+    // a fingerprint is a one-token shingle
+    MinHash.requireSketch(k, 1)
+    val sketch = udf((fps: Seq[Long]) => MinHash.sketch(fps, k))
+    fingerprintSets(frames, videoCol, fpCol)
+      .select(col(videoCol), sketch(col("fps")).as("__sig"))
+      .select(col(videoCol) +: (0 until k).map(j => col("__sig")(j).as(s"m$j")): _*)
   }
 
   /** Map each distinct frame fingerprint to a canonical representative:
@@ -72,30 +78,22 @@ object VideoDedup {
       frames: DataFrame, videoCol: String, fpCol: String,
       k: Int = 8, bands: Int = 4, tau: Double = 0.5,
       smallCap: Int = 1024, maxBucket: Long = 1L << 16): DataFrame = {
-    TextDedup.requireBanding(k, bands)
-    val rowsPer = k / bands
-    val wide = signatures(frames, videoCol, fpCol, k)
-    val bandStructs = array((0 until bands).map { b =>
-      val cols = (b * rowsPer until (b + 1) * rowsPer).map(j => col(s"m$j"))
-      struct(lit(b).as("band"), md5(concat_ws(",", cols: _*)).as("bsig"))
-    }: _*)
-    val buckets = wide
-      .select(col(videoCol), explode(bandStructs).as("bs"))
-      .select(col("bs").as("__bk"), struct(col(videoCol).as("id")).as("__m"))
+    MinHash.requireBanding(k, bands)
+    val sets = fingerprintSets(frames, videoCol, fpCol)
+    // a video with no fingerprint has no sketch and joins no bucket
+    val banding = udf((fps: Seq[Long]) => MinHash.bands(MinHash.sketch(fps, k), bands))
+    val buckets = sets
+      .select(col(videoCol), explode(banding(col("fps"))).as("__bk"))
+      .select(col("__bk"), struct(col(videoCol).as("id")).as("__m"))
     val cand = TextDedup.bucketPairs(buckets, smallCap, maxBucket, "graft.lsh.video")
       .select(col("p1.id").as("v1"), col("p2.id").as("v2"))
       .distinct()
-    // exact verify on the distinct fingerprint sets of candidate videos
-    val sets = frames.select(col(videoCol), col(fpCol).cast("long").as("__fp"))
-      .distinct()
-      .groupBy(col(videoCol))
-      .agg(sort_array(collect_set(col("__fp"))).as("fps"),
-        count(lit(1)).as("n"))
+    // exact verify on the fingerprint sets of candidate videos
     cand
-      .join(sets.select(col(videoCol).as("v1"), col("fps").as("fa"), col("n").as("na")), "v1")
-      .join(sets.select(col(videoCol).as("v2"), col("fps").as("fb"), col("n").as("nb")), "v2")
+      .join(sets.select(col(videoCol).as("v1"), col("fps").as("fa")), "v1")
+      .join(sets.select(col(videoCol).as("v2"), col("fps").as("fb")), "v2")
       .withColumn("i", size(array_intersect(col("fa"), col("fb"))))
-      .withColumn("jac", col("i") * lit(1.0) / (col("na") + col("nb") - col("i")))
+      .withColumn("jac", col("i") * lit(1.0) / (size(col("fa")) + size(col("fb")) - col("i")))
       .where(col("jac") >= tau)
       .select(col("v1"), col("v2"), round(col("jac"), 6).as("jaccard"))
   }

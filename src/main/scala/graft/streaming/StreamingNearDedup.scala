@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import graft.functions.TextFunctions.{md5Hex, minhashSketch}
+import graft.functions.MinHash
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -23,10 +21,11 @@ case class NearDupPair(d1: Long, d2: Long, simEst: Double)
   * history, without re-scanning the corpus.
   *
   * Shape: a stateless flatMap computes each document's k-row MinHash
-  * signature (the batch path's own kernel,
-  * [[graft.functions.TextFunctions.minhashSketch]]) and emits one row per
-  * LSH band; `flatMapGroupsWithState` keyed by (band, band-signature)
-  * bucket then emits each new arrival paired against the bucket's members.
+  * signature and its LSH bands (the batch path's own [[MinHash.sketch]]
+  * and [[MinHash.bands]]), one row per band; `flatMapGroupsWithState`
+  * keyed by the (band, bsig) bucket then emits each new arrival paired
+  * against the bucket's members. The arguments are checked on the driver,
+  * before the query starts.
   *
   * Scale/state contract (the streaming mirror of `bucketPairs`' caps):
   * per-bucket state is capped at `maxPerBucket` members — arrivals into a
@@ -48,7 +47,7 @@ object StreamingNearDedup {
   case class BucketState(members: List[Member], dropped: Long)
   case class TimedMember(id: Long, sig: Array[Long], tsMs: Long)
   case class TimedBucketState(members: List[TimedMember], dropped: Long)
-  case class TimedBucketRow(bucket: String, id: Long, sig: Array[Long],
+  case class TimedBucketRow(bucket: MinHash.Band, id: Long, sig: Array[Long],
                             ts: java.sql.Timestamp)
 
   /** [[candidatePairs]] bounded to an event-time window — the production
@@ -74,19 +73,15 @@ object StreamingNearDedup {
       k: Int, shingleK: Int, bands: Int,
       maxPerBucket: Int = 1024,
       watermarkDelay: String = "0 seconds"): Dataset[NearDupPair] = {
-    require(k % bands == 0, "k must divide into bands")
-    val rowsPer = k / bands
+    MinHash.requireSketch(k, shingleK)
+    MinHash.requireBanding(k, bands)
     val spark = docs.sparkSession
     import spark.implicits._
     val windowMs = windowSec * 1000L
     docs
       .flatMap { d =>
-        val sig = minhashSketch(d.text, k, shingleK)
-        if (sig == null) Iterator.empty
-        else (0 until bands).iterator.map { b =>
-          val bsig = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")
-          TimedBucketRow(s"$b|$bsig", d.id, sig, d.ts)
-        }
+        val sig = MinHash.sketch(d.text, k, shingleK)
+        MinHash.bands(sig, bands).map(b => TimedBucketRow(b, d.id, sig, d.ts))
       }
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.bucket)
@@ -147,24 +142,18 @@ object StreamingNearDedup {
   case class SigRow(doc_id: Long, band: Int, bsig: String)
 
   /** Band-signature rows of a document stream — BIT-IDENTICAL to the batch
-    * [[graft.operators.IncrementalDedup.bandSignatures]] (md5 over the
-    * band's comma-joined minhash rows; StreamLakeFlushSpec pins row-set
-    * equality), so a sink of these rows IS the signature lake a later
-    * batch delta probes.
+    * [[graft.operators.IncrementalDedup.bandSignatures]] (both call
+    * [[MinHash.bands]]; StreamLakeFlushSpec pins row-set equality), so a
+    * sink of these rows IS the signature lake a later batch delta probes.
     */
   def bandSignatureRows(
       docs: Dataset[StreamDoc], k: Int, shingleK: Int, bands: Int): Dataset[SigRow] = {
-    require(k % bands == 0, "k must divide into bands")
-    val rowsPer = k / bands
+    MinHash.requireSketch(k, shingleK)
+    MinHash.requireBanding(k, bands)
     val spark = docs.sparkSession
     import spark.implicits._
     docs.flatMap { d =>
-      val sig = minhashSketch(d.text, k, shingleK)
-      if (sig == null) Iterator.empty
-      else (0 until bands).iterator.map { b =>
-        val band = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")
-        SigRow(d.id, b, md5Hex(band.getBytes(UTF_8)))
-      }
+      MinHash.bands(MinHash.sketch(d.text, k, shingleK), bands).map(b => SigRow(d.id, b.band, b.bsig))
     }
   }
 
@@ -199,18 +188,14 @@ object StreamingNearDedup {
       docs: Dataset[StreamDoc],
       k: Int, shingleK: Int, bands: Int,
       maxPerBucket: Int = 1024): Dataset[NearDupPair] = {
-    require(k % bands == 0, "k must divide into bands")
-    val rowsPer = k / bands
+    MinHash.requireSketch(k, shingleK)
+    MinHash.requireBanding(k, bands)
     val spark = docs.sparkSession
     import spark.implicits._
     docs
       .flatMap { d =>
-        val sig = minhashSketch(d.text, k, shingleK)
-        if (sig == null) Iterator.empty
-        else (0 until bands).iterator.map { b =>
-          val bsig = sig.slice(b * rowsPer, (b + 1) * rowsPer).mkString(",")
-          (s"$b|$bsig", d.id, sig)
-        }
+        val sig = MinHash.sketch(d.text, k, shingleK)
+        MinHash.bands(sig, bands).map(b => (b, d.id, sig))
       }
       .groupByKey(_._1)
       .flatMapGroupsWithState[BucketState, NearDupPair](

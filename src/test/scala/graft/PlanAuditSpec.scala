@@ -213,6 +213,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchanges(p) <= 5, s"expected <=5 exchanges, got ${exchanges(p)}")
   }
 
+  test("video nearPairs: the audited 6-exchange shape holds") {
+    // parquet-backed frames (an in-memory fixture folds into a local scan)
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("plan-audit-frames").toString
+    spark.range(0, 2000)
+      .select((col("id") % 40).cast("string").as("video"), (col("id") % 300).as("fp"))
+      .write.mode("overwrite").parquet(dir)
+    val p = graft.operators.VideoDedup.nearPairs(spark.read.parquet(dir), "video", "fp")
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(exchanges(p) <= 6, s"expected <=6 exchanges, got ${exchanges(p)}:\n$p")
+  }
+
   test("c8_ann_exact: top-k plans as TakeOrderedAndProject, never a global sort") {
     val p = plan("c8_ann_exact")
     assert(p.contains("TakeOrderedAndProject"), p.take(800))

@@ -1,7 +1,6 @@
 package graft
 
-import graft.functions.TextFunctions
-import graft.functions.TextFunctions.kmHash
+import graft.functions.MinHash
 import graft.operators.TextDedup
 import graft.streaming.{StreamDoc, StreamingNearDedup, TimedDoc}
 import org.apache.spark.sql.DataFrame
@@ -22,9 +21,10 @@ class StreamingNearDedupSpec extends SparkSpec {
 
   /** The pre-kernel SQL form of the sketch, kept in test code as the
     * reference both paths are checked against: posexplode → lead() window
-    * → md5 → conv → kmHash min. The window is partitioned by a per-row key,
-    * so two rows that share an id each contribute only their own shingles
-    * (the DuckDB oracle's semantics); the result is (id → m0..m{K-1}).
+    * → md5 → conv → min of (h1 + j·h2) & mask60. The window is partitioned
+    * by a per-row key, so two rows that share an id each contribute only
+    * their own shingles (the DuckDB oracle's semantics); the result is
+    * (id → m0..m{K-1}).
     */
   private def sqlSketch(docs: DataFrame): Map[Long, Seq[Long]] = {
     val w = Window.partitionBy(col("__row")).orderBy(col("pos"))
@@ -42,7 +42,9 @@ class StreamingNearDedupSpec extends SparkSpec {
       .select(col("doc_id"),
         conv(substring(col("m"), 1, 15), 16, 10).cast("long").as("h1"),
         conv(substring(col("m"), 17, 14), 16, 10).cast("long").as("h2"))
-    val aggs = (0 until K).map(j => min(kmHash(col("h1"), col("h2"), j)).as(s"m$j"))
+    val mask60 = lit((1L << 60) - 1)
+    val aggs = (0 until K).map(j =>
+      min((col("h1") + col("h2") * lit(j.toLong)).bitwiseAND(mask60)).as(s"m$j"))
     hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .collect().map(r => r.getLong(0) -> (1 to K).map(r.getLong)).toMap
   }
@@ -52,7 +54,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     */
   private def kernelSketch(rows: Seq[(Long, String)]): Map[Long, Seq[Long]] =
     rows.flatMap { case (id, text) =>
-      Option(TextFunctions.minhashSketch(text, K, Shingle)).map(id -> _.toSeq)
+      Option(MinHash.sketch(text, K, Shingle)).map(id -> _.toSeq)
     }.groupMapReduce(_._1)(_._2)((a, b) => a.zip(b).map { case (x, y) => x min y })
 
   private def wideSketch(docs: DataFrame): Map[Long, Seq[Long]] =
@@ -80,15 +82,15 @@ class StreamingNearDedupSpec extends SparkSpec {
       8L -> "größe straße 東京 タワー 🎉 über",  // multi-byte UTF-8
       9L -> "shared id first row",
       9L -> "a second row sharing the id")
-    assert(TextFunctions.minhashSketch(null, K, Shingle) == null)
-    assert(TextFunctions.minhashSketch("", K, Shingle) == null)
-    assert(TextFunctions.minhashSketch("one two", K, Shingle) == null)
+    assert(MinHash.sketch(null, K, Shingle) == null)
+    assert(MinHash.sketch("", K, Shingle) == null)
+    assert(MinHash.sketch("one two", K, Shingle) == null)
     val reference = sqlSketch(rows.toDF("doc_id", "text"))
     assert(reference.keySet == Set(4L, 5L, 6L, 7L, 8L, 9L))
     assert(kernelSketch(rows) == reference, "kernel vs SQL reference")
     assert(wideSketch(rows.toDF("doc_id", "text")) == reference,
       "minhashWide vs SQL reference")
-    val first = TextFunctions.minhashSketch("shared id first row", K, Shingle)
+    val first = MinHash.sketch("shared id first row", K, Shingle)
     assert(reference(9L) != first.toSeq, "the shared id must merge both rows")
   }
 

@@ -16,7 +16,13 @@ class TextDedupSpec extends SparkSpec {
 
   test("bad MinHash arguments fail on the driver, before any job runs") {
     import graft.operators.{IncrementalDedup, VideoDedup}
+    import graft.streaming.{StreamDoc, StreamingNearDedup, TimedDoc}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
     val frames = Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("video", "fp")
+    val stream = MemoryStream[StreamDoc].toDS()
+    val timed = MemoryStream[TimedDoc].toDS()
+    val lake = java.nio.file.Files.createTempDirectory("bad-minhash").toString
     val bad: Seq[(String, () => Any)] = Seq(
       "minhashWide k = 0" -> (() => TextDedup.minhashWide(docs, "text", "doc_id", 0, 3)),
       "minhashWide shingleK = 0" -> (() => TextDedup.minhashWide(docs, "text", "doc_id", 8, 0)),
@@ -33,7 +39,17 @@ class TextDedupSpec extends SparkSpec {
       "minhashBandPairs shingleK = 0" ->
         (() => TextDedup.minhashBandPairs(docs, "text", "doc_id", 8, 0, 4)),
       "nearPairs bands = 0" -> (() => VideoDedup.nearPairs(frames, "video", "fp", k = 8, bands = 0)),
-      "nearPairs k = 0" -> (() => VideoDedup.nearPairs(frames, "video", "fp", k = 0, bands = 4)))
+      "nearPairs k = 0" -> (() => VideoDedup.nearPairs(frames, "video", "fp", k = 0, bands = 4)),
+      "candidatePairs bands = 0" -> (() => StreamingNearDedup.candidatePairs(stream, 8, 3, 0)),
+      "candidatePairs shingleK = 0" -> (() => StreamingNearDedup.candidatePairs(stream, 8, 0, 4)),
+      "candidatePairsWindowed bands = 0" ->
+        (() => StreamingNearDedup.candidatePairsWindowed(timed, 60, 8, 3, 0)),
+      "candidatePairsWindowed shingleK = 0" ->
+        (() => StreamingNearDedup.candidatePairsWindowed(timed, 60, 8, 0, 4)),
+      "sigLakeSink bands = 0" ->
+        (() => StreamingNearDedup.sigLakeSink(stream, s"$lake/l", s"$lake/c", 8, 3, 0)),
+      "sigLakeSink shingleK = 0" ->
+        (() => StreamingNearDedup.sigLakeSink(stream, s"$lake/l", s"$lake/c", 8, 0, 4)))
     bad.foreach { case (what, call) =>
       val (e, jobs) = org.apache.spark.JobCounter(spark.sparkContext) {
         intercept[IllegalArgumentException](call())
